@@ -883,7 +883,6 @@ class LakeTable:
         df: DataFrame,
         kind: str = "base",
         max_records_per_file: int | None = None,
-        n_buckets: int | None = None,
         cluster_by: list[str] | None = None,
         column_mapping: dict[str, str] | None = None,
         pre_partitioned: bool = False,
@@ -905,9 +904,6 @@ class LakeTable:
         file skipping (:meth:`read` ``stats_filters`` / :meth:`point_lookup`),
         the Iceberg manifest-stats analog: at 100 TB a point lookup prunes to
         one file per bucket from METADATA alone, before any footer is opened.
-
-        ``n_buckets`` overrides the snapshot's bucket count for the write —
-        used only by :meth:`rebucket` (bucket-count evolution).
 
         ``column_mapping`` overrides the snapshot's logical→physical name
         mapping (used by :func:`plans.merge.apply_changes` when the SAME
@@ -976,18 +972,16 @@ class LakeTable:
                 for c in snap.get("order_cols", ["ts", "lsn"])
                 if c in logical_cols and c not in lead
             ]
-        # hash-repartition on bucket id over 4× slots: with exactly n_buckets
-        # slots, hash collisions leave ~37% of write tasks empty while others
-        # serialize two buckets; 4× slots make collisions rare at no extra pass
-        # (repartitionByRange would be exact but adds a sampling job that
-        # recomputes the whole merge plan — measured 4× slower end-to-end).
-        # ≤1 file per bucket per commit unless a bucket exceeds the per-file
-        # row cap, in which case the writer rolls additional files (all still
-        # key-sorted; every invariant downstream is per-bucket, not per-file).
-        nb = self.n_buckets() if n_buckets is None else n_buckets
-        clustered = (
-            df if pre_partitioned else df.repartition(4 * nb, F.col(BUCKET_COL))
-        )
+        # hash-repartition on bucket id with no explicit count:
+        # spark.sql.shuffle.partitions sizes the exchange (AQE may coalesce
+        # it), so the task count follows the host, not n_buckets. Each bucket
+        # still lands in exactly one task, so a commit writes ≤1 file per
+        # bucket unless a bucket exceeds the per-file row cap, in which case
+        # the writer rolls additional files (all still key-sorted; every
+        # invariant downstream is per-bucket, not per-file). A deployment
+        # that wants more write parallelism raises
+        # spark.sql.shuffle.partitions.
+        clustered = df if pre_partitioned else df.repartition(F.col(BUCKET_COL))
         (
             clustered.sortWithinPartitions(*sort_cols)
             .write.partitionBy(BUCKET_COL)
@@ -2217,7 +2211,6 @@ class LakeTable:
             key = self.key_col()
             files = self.write_data_files(
                 df.withColumn(BUCKET_COL, bucket_expr(key, new_n_buckets)),
-                n_buckets=new_n_buckets,
                 column_mapping={},
             )
             return self.commit(

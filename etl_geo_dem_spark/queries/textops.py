@@ -15,6 +15,8 @@ Cross-engine portability notes baked into the designs:
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -287,6 +289,17 @@ def _shingle_postings(docs):
     return docs.select("doc_id", F.explode("arr").alias("s"))
 
 
+def _index_prefix_len(sz, tau: float):
+    """Index-prefix length ``sz − floor(2τ/(1+τ)·sz) + 1`` for the prefix
+    filter. The ratio is exact rational arithmetic on ``tau``: a float
+    ``2τ/(1+τ)`` (0.888… at τ=0.8) can land just under the true ratio, and
+    its floor then drops one id at every multiple of the denominator —
+    pruning true pairs that the exact verify can no longer recover."""
+    t = Fraction(str(tau))
+    r = 2 * t / (1 + t)
+    return (sz - F.floor(F.lit(r.numerator) * sz / r.denominator) + 1).cast("int")
+
+
 @register(
     "dedup_ngram_jaccard_pairs",
     oracle=f"""
@@ -380,7 +393,7 @@ def dedup_ngram_jaccard_pairs(spark, sf_dir):
     )
     par = spark.sparkContext.defaultParallelism
     lp = (F.col("sz") - F.ceil(F.lit(tau) * F.col("sz")) + 1).cast("int")
-    li = (F.col("sz") - F.floor(F.lit(8) * F.col("sz") / 9) + 1).cast("int")
+    li = _index_prefix_len(F.col("sz"), tau)
     probe = docs_ids.select(
         "doc_id", "sz", F.posexplode(F.slice("arr", F.lit(1), lp))
     ).select(

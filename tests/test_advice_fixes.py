@@ -136,3 +136,28 @@ def test_stateful_distinct_turns_across_batches():
     assert out2["turns_seen"].iloc[0] == 4, "re-seen turns were double-counted"
     assert out2["max_lsn"].iloc[0] == 7
     assert out2["batch_rows"].iloc[0] == 3
+
+
+@pytest.mark.parametrize("tau", [0.8, 0.9, 0.7])
+def test_jaccard_index_prefix_uses_exact_ratio(spark, tau):
+    """The index prefix ``sz − floor(2τ/(1+τ)·sz) + 1`` takes the ratio from
+    ``tau`` exactly; at τ=0.8 it is ``sz − floor(8·sz/9) + 1``, with no id
+    lost at the multiples of 9 where a float 0.888… ratio floors one low."""
+    from fractions import Fraction
+
+    from etl_geo_dem_spark.queries.textops import _index_prefix_len
+
+    t = Fraction(str(tau))
+    r = 2 * t / (1 + t)
+    if tau == 0.8:
+        assert r == Fraction(8, 9)
+    got = {
+        row.sz: row.li
+        for row in spark.range(1, 501)
+        .select(F.col("id").cast("int").alias("sz"))
+        .select("sz", _index_prefix_len(F.col("sz"), tau).alias("li"))
+        .collect()
+    }
+    assert got == {
+        sz: sz - (r.numerator * sz) // r.denominator + 1 for sz in range(1, 501)
+    }

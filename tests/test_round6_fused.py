@@ -46,12 +46,13 @@ def test_fused_final_state_equals_split(spark, warehouse):
 def test_fused_agg_is_single_exchange(spark):
     """The fused plan's whole point: repartition by storage bucket, then
     aggregate by (bucket, key) WITHOUT a second exchange — Spark must accept
-    hash(bucket) partitioning as satisfying the (bucket, key) clustering."""
+    hash(bucket) partitioning as satisfying the (bucket, key) clustering.
+    Plans the same count-free exchange as ``plans/merge.py``."""
     ch = generate_changes(spark, 5_000, n_conv=100, turns_per_conv=10,
                           n_epochs=1, n_partitions=4)
     bucketed = ch.withColumn(BUCKET_COL, bucket_expr("conv_id", 8))
     winners = lww_winners(
-        bucketed.repartition(32, F.col(BUCKET_COL)),
+        bucketed.repartition(F.col(BUCKET_COL)),
         [BUCKET_COL, "conv_id", "turn_idx"], ["ts", "lsn"], strategy="agg",
     )
     plan = winners._jdf.queryExecution().executedPlan().toString()
