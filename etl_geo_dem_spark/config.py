@@ -7,7 +7,11 @@ paths.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+from etl_geo_dem_spark.operators.lww import STRATEGIES
+
+MERGE_MODES = ("cow", "mor")
 
 
 @dataclass(frozen=True)
@@ -30,9 +34,16 @@ class EngineConfig:
     salt_buckets: int = 16
     hot_key_threshold: float = 0.01
     hot_key_sample: float = 0.1
-    # "agg" | "window" | "salted_window" | "bucket_sorted" — see operators/lww.py;
-    # "bucket_sorted" is the streaming micro-batch strategy (single shuffle
-    # shared between dedup and write clustering; skew granularity = bucket)
+    # one of operators.lww.STRATEGIES. On MOR, "agg" is planned as ONE
+    # exchange by storage bucket, then an aggregate by (bucket, key) that
+    # Spark runs without a second exchange (plans/merge.py). The trade: no
+    # map-side combine before that shuffle, and skew granularity becomes the
+    # storage bucket. For a batch dominated by one key use "window": a
+    # two-exchange plan whose map-side WindowGroupLimit ships one row per key
+    # per map task. Measured at local[4] on a 4-core host, one MOR epoch of
+    # 4.2M events with one key carrying 80% of them, median of 3 warm runs:
+    # "agg" 5.24 s, "window" 3.12 s. Final state is identical either way
+    # (tests/test_round6_fused.py).
     dedup_strategy: str = "agg"
     # merge_mode:
     #   "cow" — copy-on-write: every epoch rewrites touched buckets; reads are
@@ -46,24 +57,14 @@ class EngineConfig:
     # accumulates this many delta files (bounds read amplification; 0 = never)
     max_deltas_per_bucket: int = 16
     target_file_rows: int = 5_000_000
-    # write the advisory per-epoch lineage manifest off the commit path (a
-    # background thread). The manifest is recomputable from the snapshot it
-    # describes, so exactly-once is unaffected; what moves off the hot path
-    # is a put_atomic (2 fsyncs on POSIX) per micro-batch. Streaming-tail
-    # knob; batch replays amortize it and should keep the default.
-    epoch_manifest_async: bool = False
-    # mor + "agg" only: fuse the dedup exchange with the writer's bucket
-    # clustering — ONE shuffle per epoch (repartition by storage bucket, then
-    # aggregate by (bucket, key), which Spark plans WITHOUT a second exchange
-    # because bucket-partitioning already co-locates every key) instead of
-    # key-exchange + bucket-exchange. Measured at the bench shape (5.25M-event
-    # epochs, local[32]): 3.6 s → 2.3 s per epoch warm (r6). The trade,
-    # exactly as for ``bucket_sorted``: no map-side combine BEFORE the
-    # shuffle, and skew granularity becomes the storage bucket — a single
-    # pathological key that dominates a batch lands its whole mass on one
-    # task. For such streams set False (classic two-exchange plan whose
-    # map-side partials ship ≤1 row per hot key per map task) or use the
-    # salted_window strategy. Final state is identical either way
-    # (tests/test_round6_fused.py pins equivalence and the plan shape).
-    mor_fused_exchange: bool = True
-    extra: dict = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        if self.merge_mode not in MERGE_MODES:
+            raise ValueError(
+                f"unknown merge_mode {self.merge_mode!r}; expected one of {MERGE_MODES}"
+            )
+        if self.dedup_strategy not in STRATEGIES:
+            raise ValueError(
+                f"unknown dedup_strategy {self.dedup_strategy!r}; "
+                f"expected one of {STRATEGIES}"
+            )

@@ -6,7 +6,7 @@ value as "latest level wins" through an iterative per-key stateful scan
 that collapses to a single per-key reduction: ``final(conv_id, turn_idx) =
 argmax_{(ts, lsn)} event`` — SURVEY.md §2.5 W1.
 
-Four physical strategies for the same logical result:
+Three physical strategies for the same logical result (``STRATEGIES``):
 
 - ``agg``      ``groupBy(key).agg(max(struct(ts, lsn, payload...)))``. Partial
                (map-side) aggregation combines locally before the shuffle, so a hot
@@ -24,13 +24,8 @@ Four physical strategies for the same logical result:
                ``split_list`` never fixed, `pipeline_transform_vrt_gdal.py:41-62`).
                Retained for the cases the built-in rewrites don't cover (rank ≤ k
                with ties, engines without WindowGroupLimit, skewed joins).
-- ``bucket_sorted``  one shuffle by STORAGE BUCKET, (key asc, order desc) sort,
-               first-of-key-run filter. The streaming micro-batch strategy:
-               dedup and write-clustering share a single exchange, so the
-               per-epoch fixed cost is halved (see its docstring for the
-               skew trade).
 
-All four are pure pyspark.sql expressions — no Python in the hot path.
+All three are pure pyspark.sql expressions — no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -41,6 +36,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
+
+STRATEGIES = ("agg", "window", "salted_window")
 
 
 def _desc_order(order_cols: Sequence[str]) -> list[Column]:
@@ -127,50 +124,6 @@ def lww_winners_salted_window(
     )
 
 
-def lww_winners_bucket_sorted(
-    df: DataFrame,
-    key_cols: Sequence[str] = KEY_COLS,
-    order_cols: Sequence[str] = ORDER_COLS,
-    bucket_col: str = "_bucket",
-) -> DataFrame:
-    """Single-shuffle LWW for micro-batches: shuffle ONCE by the storage
-    bucket, sort within each partition by (key asc, order desc), keep the
-    first row of every key run.
-
-    The other strategies shuffle by key for the dedup and then the write path
-    shuffles AGAIN by ``bucket_col`` to cluster output files — two exchanges
-    and ~2×(shuffle slots) tasks per epoch. For a large batch replay that
-    cost amortizes; for a streaming micro-batch it IS the cost (measured:
-    merge_write is near-flat in rows at micro-batch sizes,
-    BENCH/BASELINE.md streaming section). Here the dedup borrows the write's
-    bucket clustering: one exchange, and the output leaves already
-    bucket-partitioned AND (bucket, key)-sorted, so the writer skips its
-    repartition entirely (``write_data_files(pre_partitioned=True)``).
-
-    ``df`` must already carry ``bucket_col``. The run-boundary filter
-    (``lag(key) != key`` over the bucket window) is exactly the rank-1 window
-    filter computed run-wise instead of per-key — same winners as
-    :func:`lww_winners_window` for any tie-free stamp, and the documented
-    duplicate-delivery tie semantics otherwise.
-
-    Scale note: skew granularity is the BUCKET, not the key — a hot key
-    costs its whole bucket's sort on one task. That is the right trade for
-    micro-batches (bounded by trigger size); for 10^10-row batch replays use
-    ``agg``, whose map-side partials are key-skew-free.
-    """
-    w = Window.partitionBy(bucket_col).orderBy(
-        *[F.col(c).asc() for c in key_cols], *_desc_order(order_cols)
-    )
-    kstruct = F.struct(*[F.col(c) for c in key_cols])
-    prev = F.lag(kstruct).over(w)
-    return (
-        df.repartition(F.col(bucket_col))
-        .withColumn("_first_in_run", prev.isNull() | ~prev.eqNullSafe(kstruct))
-        .filter(F.col("_first_in_run"))
-        .drop("_first_in_run")
-    )
-
-
 def lww_winners(
     df: DataFrame,
     key_cols: Sequence[str] = KEY_COLS,
@@ -178,7 +131,6 @@ def lww_winners(
     strategy: str = "agg",
     salt_buckets: int = 16,
     hot_keys: Sequence[str] | None = None,
-    bucket_col: str = "_bucket",
 ) -> DataFrame:
     """Dispatch over the physical strategies (identical logical result)."""
     if strategy == "agg":
@@ -189,6 +141,4 @@ def lww_winners(
         return lww_winners_salted_window(
             df, key_cols, order_cols, salt_buckets=salt_buckets, hot_keys=hot_keys
         )
-    if strategy == "bucket_sorted":
-        return lww_winners_bucket_sorted(df, key_cols, order_cols, bucket_col)
-    raise ValueError(f"unknown LWW strategy {strategy!r}")
+    raise ValueError(f"unknown LWW strategy {strategy!r}; expected one of {STRATEGIES}")

@@ -891,7 +891,7 @@ class LakeTable:
         """Write ``df`` (must carry ``_bucket``) into a fresh commit dir.
 
         ``pre_partitioned``: caller asserts ``df`` is ALREADY physically
-        clustered by ``_bucket`` (e.g. the ``bucket_sorted`` LWW strategy,
+        clustered by ``_bucket`` (the fused MOR apply in ``plans/merge.py``,
         whose dedup shuffle is by bucket) — the writer then skips its own
         repartition, making the whole epoch a single-exchange job. The
         within-partition sort still runs; file layout and stats are

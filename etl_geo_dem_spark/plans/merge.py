@@ -324,17 +324,8 @@ def _apply_changes_once(
         hot_keys = detect_hot_keys(
             batch, key_cols[0], cfg.hot_key_threshold, cfg.hot_key_sample
         )
-    pre_partitioned = False
-    if strategy == "bucket_sorted":
-        # the single-shuffle micro-batch path: bucket BEFORE dedup so the
-        # dedup's one exchange doubles as the write's bucket clustering —
-        # on MOR the writer then skips its repartition (operators/lww.py).
-        winners = lww_winners(
-            batch.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets)),
-            key_cols, order_cols, strategy=strategy,
-        )
-        pre_partitioned = cfg.merge_mode == "mor"
-    elif strategy == "agg" and cfg.merge_mode == "mor" and cfg.mor_fused_exchange:
+    fused = strategy == "agg" and cfg.merge_mode == "mor"
+    if fused:
         # fused-exchange MOR apply (round 6, guide §2.4 "two operations keyed
         # the same way can share one exchange"): repartition ONCE by the
         # storage bucket, then aggregate by (bucket, key). The exchange has no
@@ -346,14 +337,13 @@ def _apply_changes_once(
         # its own exchange; the writer then takes the output
         # pre_partitioned. One shuffle + one stage barrier per
         # epoch instead of two of each (measured 3.6 s → 2.3 s per bench
-        # epoch warm). Trade and opt-out documented on
-        # EngineConfig.mor_fused_exchange.
+        # epoch warm). The skew trade, and the "window" escape for a batch
+        # dominated by one key, are documented on EngineConfig.dedup_strategy.
         bucketed = batch.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
         winners = lww_winners(
             bucketed.repartition(F.col(BUCKET_COL)),
             [BUCKET_COL, *key_cols], order_cols, strategy="agg",
         )
-        pre_partitioned = True
     else:
         winners = lww_winners(
             batch, key_cols, order_cols, strategy=strategy,
@@ -379,7 +369,7 @@ def _apply_changes_once(
         out = batch_state.observe(obs_out, F.count(F.lit(1)).alias("rows"))
         new_files = table.write_data_files(
             out, kind="delta", max_records_per_file=cfg.target_file_rows,
-            column_mapping=new_mapping, pre_partitioned=pre_partitioned,
+            column_mapping=new_mapping, pre_partitioned=fused,
             rows_unique_per_key=True,  # LWW winners: one row per key
         )
         # nothing rewritten: the parent's manifest refs carry over BY
@@ -508,56 +498,8 @@ def _apply_changes_once(
     }
     if extra_manifest:
         manifest.update(extra_manifest)
-    if cfg.epoch_manifest_async:
-        # advisory lineage off the hot path: single worker keeps manifests
-        # landing in commit order; recomputable from the snapshot, so a lost
-        # write on crash costs nothing exactly-once depends on. A failed
-        # write must still be VISIBLE (advisory ≠ silent): surface it on
-        # stderr instead of letting the Future swallow the exception.
-        _manifest_pool().submit(
-            table.write_epoch_manifest, epoch_id, manifest, stream_id
-        ).add_done_callback(_warn_if_failed)
-    else:
-        table.write_epoch_manifest(epoch_id, manifest, stream_id=stream_id)
+    table.write_epoch_manifest(epoch_id, manifest, stream_id=stream_id)
     return manifest
-
-
-_MANIFEST_POOL = None
-_MANIFEST_POOL_LOCK = __import__("threading").Lock()
-
-
-def _manifest_pool():
-    # double-checked under a lock: two streams committing their first epochs
-    # concurrently must share ONE single-worker pool, or the commit-order and
-    # flush-barrier guarantees silently split across two queues
-    global _MANIFEST_POOL
-    if _MANIFEST_POOL is None:
-        with _MANIFEST_POOL_LOCK:
-            if _MANIFEST_POOL is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                _MANIFEST_POOL = ThreadPoolExecutor(
-                    max_workers=1, thread_name_prefix="epoch-manifest"
-                )
-    return _MANIFEST_POOL
-
-
-def _warn_if_failed(fut) -> None:
-    exc = fut.exception()
-    if exc is not None:
-        import sys
-
-        print(
-            f"WARNING: async epoch-manifest write failed (advisory lineage "
-            f"only; snapshot commit unaffected): {exc!r}",
-            file=sys.stderr,
-        )
-
-
-def flush_epoch_manifests() -> None:
-    """Barrier for async epoch-manifest writes (tests / orderly shutdown)."""
-    if _MANIFEST_POOL is not None:
-        _manifest_pool().submit(lambda: None).result()
 
 
 def replay(

@@ -331,8 +331,10 @@ def join_neighbourhood_window(spark, sf_dir):
     9.1 s → ~1 s at sf1.0 with identical output on every SF."""
     o = t(spark, sf_dir, "orders")
     # the parquet column is timestamp_ntz; the session tz is pinned UTC, so
-    # the cast to timestamp is an exact, monotone micros mapping (no DST)
-    d = o.select(
+    # the cast to timestamp is an exact, monotone micros mapping (no DST).
+    # A NULL date never satisfies the join's BETWEEN, but NULL-ordered rows
+    # would share one RANGE peer group and count each other: drop them.
+    d = o.filter(F.col("o_orderdate").isNotNull()).select(
         "o_custkey",
         "o_orderkey",
         F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("_us"),

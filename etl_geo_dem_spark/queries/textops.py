@@ -368,7 +368,7 @@ def dedup_ngram_jaccard_pairs(spark, sf_dir):
 
     Measured at sf1.0 (50k docs, 931-shingle degenerate vocabulary,
     local[32]): round-5 plan 60.1 s (driver: 81.8 s) → 17.8 s end-to-end
-    (min of 3 noop-sink runs, bench_extra.py); string→int verify alone cut
+    (min of 3 noop-sink runs); string→int verify alone cut
     the 60M-pair array_intersect stage ~4×; identical output rows at every
     step (dual-oracle green at sf0.001/sf0.01/sf0.1, identical 2 544 pairs
     vs the round-5 plan at sf1.0)."""

@@ -37,9 +37,10 @@ import json
 import sys
 import time
 
-from etl_geo_dem_spark.config import EngineConfig
+from etl_geo_dem_spark.config import MERGE_MODES, EngineConfig
+from etl_geo_dem_spark.operators.lww import STRATEGIES
 from etl_geo_dem_spark.plans.lake_table import LakeTable
-from etl_geo_dem_spark.plans.merge import flush_epoch_manifests, replay
+from etl_geo_dem_spark.plans.merge import replay
 from etl_geo_dem_spark.schemas import CHANGE_SCHEMA, STATE_SCHEMA
 from etl_geo_dem_spark.session import get_spark
 from etl_geo_dem_spark.sources.changes import generate_changes
@@ -54,13 +55,11 @@ def main(argv=None):
     p.add_argument("--n-buckets", type=int, default=32)
     p.add_argument("--master", default=None)
     p.add_argument(
-        "--strategy", default="agg",
-        choices=["agg", "window", "salted_window", "bucket_sorted"],
-        help="LWW dedup strategy; bucket_sorted is the single-shuffle "
-             "micro-batch strategy (streaming-tail config)",
+        "--strategy", default="agg", choices=STRATEGIES,
+        help="LWW dedup strategy; use window for a stream dominated by one key",
     )
     p.add_argument(
-        "--merge-mode", default="mor", choices=["mor", "cow"],
+        "--merge-mode", default="mor", choices=MERGE_MODES,
         help="mor = O(batch) delta appends + read-time LWW + auto-compaction "
              "(the ingest default); cow = rewrite touched buckets per epoch",
     )
@@ -92,11 +91,6 @@ def main(argv=None):
     p.add_argument("--checkpoint", help="streaming checkpoint dir (required with --stream-source / --kafka-topic)")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument(
-        "--async-manifests", action="store_true",
-        help="write advisory epoch-lineage manifests off the commit path "
-             "(streaming-tail knob; flushed before exit)",
-    )
-    p.add_argument(
         "--follow", action="store_true",
         help="keep tailing indefinitely (default: availableNow — drain what "
              "exists, then stop)",
@@ -111,6 +105,11 @@ def main(argv=None):
                 p.error(f"bad --expect entry {kv!r} (want NAME=SQL_PREDICATE)")
             expectations[name.strip()] = pred
 
+    cfg = EngineConfig(
+        dedup_strategy=args.strategy,
+        n_buckets=args.n_buckets,
+        merge_mode=args.merge_mode,
+    )
     spark = get_spark(master=args.master, app_name="cdc_ingest")
     t = (
         LakeTable.load(spark, args.table)
@@ -125,20 +124,13 @@ def main(argv=None):
         t0 = time.time()
         q = start_kafka_cdc_ingest(
             spark, t, topic=args.kafka_topic, checkpoint_dir=args.checkpoint,
-            bootstrap_servers=args.kafka_servers,
-            cfg=EngineConfig(
-                dedup_strategy=args.strategy,
-                n_buckets=args.n_buckets,
-                merge_mode=args.merge_mode,
-                epoch_manifest_async=args.async_manifests,
-            ),
+            bootstrap_servers=args.kafka_servers, cfg=cfg,
             keep_lineage=args.kafka_lineage,
             expectations=expectations,
             fail_on_violation=args.fail_on_violation,
             available_now=not args.follow,
         )
         q.awaitTermination()
-        flush_epoch_manifests()
         print(
             json.dumps(
                 {
@@ -158,20 +150,13 @@ def main(argv=None):
 
         t0 = time.time()
         q = start_cdc_ingest(
-            spark, t, args.stream_source, CHANGE_SCHEMA, args.checkpoint,
-            cfg=EngineConfig(
-                dedup_strategy=args.strategy,
-                n_buckets=args.n_buckets,
-                merge_mode=args.merge_mode,
-                epoch_manifest_async=args.async_manifests,
-            ),
+            spark, t, args.stream_source, CHANGE_SCHEMA, args.checkpoint, cfg=cfg,
             max_files_per_trigger=args.max_files_per_trigger,
             available_now=not args.follow,
             expectations=expectations,
             fail_on_violation=args.fail_on_violation,
         )
         q.awaitTermination()
-        flush_epoch_manifests()
         sid_watermarks = t.snapshot_meta().get("stream_watermarks", {})
         print(
             json.dumps(
@@ -206,11 +191,7 @@ def main(argv=None):
     manifests = replay(
         t,
         changes,
-        EngineConfig(
-            dedup_strategy=args.strategy,
-            n_buckets=args.n_buckets,
-            merge_mode=args.merge_mode,
-        ),
+        cfg,
         expectations=expectations,
         fail_on_violation=args.fail_on_violation,
     )

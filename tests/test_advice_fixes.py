@@ -161,3 +161,33 @@ def test_jaccard_index_prefix_uses_exact_ratio(spark, tau):
     assert got == {
         sz: sz - (r.numerator * sz) // r.denominator + 1 for sz in range(1, 501)
     }
+
+
+def test_neighbourhood_window_ignores_null_dated_orders(spark, tmp_path):
+    """NULL-dated orders never satisfy the oracle's BETWEEN join; the range
+    window must not pair them with each other either."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_geo_dem_spark.queries import REGISTRY
+
+    d = datetime.datetime
+    orders = pa.table({
+        "o_orderkey": pa.array([10, 11, 12, 13, 20, 21, 30, 31], pa.int64()),
+        "o_custkey": pa.array([1, 1, 1, 1, 2, 2, 3, 3], pa.int64()),
+        "o_orderdate": pa.array(
+            [None, None, d(2024, 1, 1), d(2024, 1, 5), None, None,
+             d(2024, 1, 1), d(2024, 1, 20)],
+            pa.timestamp("us"),
+        ),
+    })
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    q = REGISTRY["join_neighbourhood_window"]
+
+    got = sorted(tuple(r) for r in q.fn(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'")
+    exp = sorted(con.execute(q.oracle).fetchall())
+    assert exp == [(1, 1)]
+    assert got == exp

@@ -50,8 +50,10 @@ def test_mor_apply_tasks_follow_shuffle_partitions(spark, warehouse, fused):
     touched = {
         r[0] for r in batch.select(bucket_expr("conv_id", N_BUCKETS)).distinct().collect()
     }
+    # "agg" takes the fused plan; "window" the two-exchange one
     cfg = EngineConfig(
-        merge_mode="mor", n_buckets=N_BUCKETS, mor_fused_exchange=fused
+        merge_mode="mor", n_buckets=N_BUCKETS,
+        dedup_strategy="agg" if fused else "window",
     )
 
     group = f"exchange-sizing-{fused}"

@@ -1,6 +1,6 @@
-"""Round-6 fused-exchange MOR apply (EngineConfig.mor_fused_exchange):
-the dedup aggregate and the writer's bucket clustering share ONE shuffle.
-Pins (a) final-state equivalence with the classic two-exchange plan across
+"""Round-6 fused-exchange MOR apply (``dedup_strategy="agg"`` on MOR): the
+dedup aggregate and the writer's bucket clustering share ONE shuffle. Pins
+(a) final-state equivalence with the two-exchange ``window`` plan across
 restarts and schema evolution, and (b) the single-Exchange plan shape."""
 
 from __future__ import annotations
@@ -18,16 +18,20 @@ from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import epoch_batches, generate_changes
 
 
+def _cfg(fused: bool) -> EngineConfig:
+    """The fused plan, or the two-exchange ``window`` plan it must equal."""
+    return EngineConfig(
+        dedup_strategy="agg" if fused else "window", merge_mode="mor", n_buckets=8
+    )
+
+
 def _replay(spark, path, fused: bool):
     table = LakeTable.create(spark, path, STATE_SCHEMA, n_buckets=8)
     ch = generate_changes(
         spark, 30_000, n_conv=300, turns_per_conv=20, n_epochs=3,
         evolve_from_epoch=2, n_partitions=8,
     )
-    cfg = EngineConfig(
-        dedup_strategy="agg", merge_mode="mor", n_buckets=8,
-        mor_fused_exchange=fused,
-    )
+    cfg = _cfg(fused)
     for e, batch in epoch_batches(ch, evolve_from_epoch=2):
         apply_changes(table, batch, e, cfg)
     return table
@@ -37,6 +41,7 @@ def test_fused_final_state_equals_split(spark, warehouse):
     t_fused = _replay(spark, os.path.join(warehouse, "fused"), fused=True)
     t_split = _replay(spark, os.path.join(warehouse, "split"), fused=False)
     cols = sorted(t_fused.read_public().columns)
+    assert "tool_args" in cols  # the epoch-2 evolution reached the fused table
     a = t_fused.read_public().orderBy("conv_id", "turn_idx").select(*cols).toPandas()
     b = t_split.read_public().orderBy("conv_id", "turn_idx").select(*cols).toPandas()
     assert len(a) > 0
@@ -69,8 +74,7 @@ def test_fused_epoch_skip_and_resume(spark, warehouse, fused):
     table = LakeTable.create(spark, path, STATE_SCHEMA, n_buckets=8)
     ch = generate_changes(spark, 10_000, n_conv=100, turns_per_conv=10,
                           n_epochs=2, n_partitions=4)
-    cfg = EngineConfig(dedup_strategy="agg", merge_mode="mor", n_buckets=8,
-                       mor_fused_exchange=fused)
+    cfg = _cfg(fused)
     m0 = apply_changes(table, ch.filter(F.col("epoch") == 0), 0, cfg)
     assert m0["status"] == "committed"
     again = apply_changes(table, ch.filter(F.col("epoch") == 0), 0, cfg)

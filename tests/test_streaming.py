@@ -4,8 +4,10 @@ operator."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from etl_geo_dem_spark.config import EngineConfig
 from etl_geo_dem_spark.plans.lake_table import LakeTable
 from etl_geo_dem_spark.plans.merge import apply_changes
 from etl_geo_dem_spark.schemas import CHANGE_SCHEMA, STATE_SCHEMA
@@ -26,16 +28,19 @@ def _write_change_files(spark, out_dir, n=1200, n_epochs=3):
     return ch
 
 
-def test_stream_ingest_matches_batch_replay(spark, warehouse, tmp_path):
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_stream_ingest_matches_batch_replay(spark, warehouse, tmp_path, merge_mode):
     src = str(tmp_path / "incoming")
     ckpt = str(tmp_path / "ckpt")
     ch = _write_change_files(spark, src)
 
     stable = LakeTable.create(spark, os.path.join(warehouse, "stream_t"), STATE_SCHEMA, n_buckets=8)
     q = start_cdc_ingest(
-        spark, stable, src + "/*/", CHANGE_SCHEMA, ckpt, max_files_per_trigger=1
+        spark, stable, src + "/*/", CHANGE_SCHEMA, ckpt,
+        EngineConfig(merge_mode=merge_mode), max_files_per_trigger=1,
     )
     q.awaitTermination(120)
+    assert len(stable.read_epoch_manifests()) == 3  # one per micro-batch
 
     btable = LakeTable.create(spark, os.path.join(warehouse, "batch_t"), STATE_SCHEMA, n_buckets=8)
     apply_changes(btable, ch, 0)
