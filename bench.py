@@ -118,7 +118,7 @@ def _one_replay(spark, n_events: int, n_epochs: int) -> dict:
             src = os.path.join(wh, "wal")
             changes.write.mode("overwrite").parquet(src)
             changes = spark.read.parquet(src)
-        cfg = EngineConfig(dedup_strategy="agg", n_buckets=32, merge_mode=os.environ.get("SPARK_GRAFT_BENCH_MODE", "mor"))
+        cfg = EngineConfig(dedup_strategy="agg", merge_mode=os.environ.get("SPARK_GRAFT_BENCH_MODE", "mor"))
         t0 = time.time()
         applied = 0
         from pyspark.sql import functions as F

@@ -18,11 +18,6 @@ MERGE_MODES = ("cow", "mor")
 class EngineConfig:
     """Tuning knobs for the CDC apply path.
 
-    n_buckets: storage bucketing of the transcript table by ``hash(conv_id)``.
-        The unit of copy-on-write during MERGE — only buckets touched by a change
-        batch are rewritten (reference analog: only coastal/low tiles processed,
-        `pipeline_transform_sea_level.py:1747-1792`). At 100 TB you would set this
-        to O(thousands); file count per commit stays = touched buckets.
     salt_buckets: fan-out for the salted first stage of LWW dedup on hot keys.
     hot_key_threshold: a conv_id is "hot" if it carries more than this fraction
         of the sampled batch (BASELINE: top-1% keys carry ≥50% of events).
@@ -30,7 +25,6 @@ class EngineConfig:
         (detection must not itself shuffle the full batch).
     """
 
-    n_buckets: int = 32
     salt_buckets: int = 16
     hot_key_threshold: float = 0.01
     hot_key_sample: float = 0.1

@@ -49,8 +49,8 @@ from etl_geo_dem_spark.plans.lake_table import (
     LakeTable,
     bucket_expr,
     carry_excluding,
+    protected_columns,
 )
-from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
 
 ENVELOPE_COLS = {"op", "epoch"}
 
@@ -247,9 +247,9 @@ def _apply_changes_once(
     # O(files)-sized file list is never materialized on the MOR path at all
     # (VERDICT r3 'What's wrong #2': ≥5 accessor re-parses per epoch).
     snap = table.snapshot_meta()
-    last = int(snap["summary"].get("epoch_id", -1))
+    last = int(snap["summary"]["epoch_id"])
     watermark = (
-        int(snap.get("stream_watermarks", {}).get(stream_id, -1))
+        int(snap["stream_watermarks"].get(stream_id, -1))
         if stream_id is not None
         else last
     )
@@ -269,7 +269,7 @@ def _apply_changes_once(
     # BUCKETING column may not: xxhash64 is type-sensitive (int32(42) and
     # int64(42) hash to different buckets), so widening it would strand every
     # stored row in a bucket the new hash no longer probes.
-    bucket_key = snap.get("key_col", "conv_id")
+    bucket_key = snap["key_col"]
     if bucket_key in widened_cols:
         raise SchemaEvolutionError(
             f"cannot widen bucketing key column {bucket_key!r}: the storage "
@@ -284,8 +284,8 @@ def _apply_changes_once(
     # another live column's physical (e.g. a renamed column's birth name). In
     # either case a fresh suffixed physical is allocated, so re-adding a
     # dropped name is SAFE: pre-drop rows read NULL, never ghost data.
-    parent_mapping = dict(snap.get("column_mapping") or {})
-    tombstoned = set(snap.get("dropped_columns", []))  # PHYSICAL names
+    parent_mapping = dict(snap["column_mapping"])
+    tombstoned = set(snap["dropped_columns"])  # PHYSICAL names
     current_physicals = {
         parent_mapping.get(f.name, f.name) for f in state_schema.fields
     }
@@ -301,10 +301,10 @@ def _apply_changes_once(
             new_mapping[c] = p
         current_physicals.add(p)
     # merge keys/ordering come from the table's own metadata (persisted at
-    # create() and carried forward by every commit) — module defaults only
-    # apply to pre-metadata snapshots.
-    key_cols = snap.get("key_cols", KEY_COLS)
-    order_cols = snap.get("order_cols", ORDER_COLS)
+    # create() and carried forward by every commit; the snapshot parse fills
+    # the engine defaults for pre-metadata snapshots).
+    key_cols = snap["key_cols"]
+    order_cols = snap["order_cols"]
 
     obs_in = Observation(f"epoch_{epoch_id}_in")
     exp_metrics = []
@@ -375,7 +375,7 @@ def _apply_changes_once(
         # nothing rewritten: the parent's manifest refs carry over BY
         # REFERENCE — commit metadata is O(this epoch's files), flat as the
         # table grows (manifest-list tier, lake_table.py module docstring)
-        carried_refs = list(snap.get("manifests", []))
+        carried_refs = list(snap["manifests"])
         touched = sorted({f["bucket"] for f in new_files})
     else:
         # copy-on-write needs the touched set BEFORE writing (it decides which
@@ -412,7 +412,7 @@ def _apply_changes_once(
         )
         # copy-on-write: the rewritten buckets leave the carried refs by
         # metadata exclusion — no file descriptor is re-serialized
-        carried_refs = carry_excluding(snap.get("manifests", []), touched)
+        carried_refs = carry_excluding(snap["manifests"], touched)
         batch_state.unpersist()
     t_write = time.time() - t_write0
     # F.sum over an EMPTY batch is NULL (and an optimized-away plan has no
@@ -447,7 +447,7 @@ def _apply_changes_once(
         stream_watermarks=(
             None
             if stream_id is None
-            else {**snap.get("stream_watermarks", {}), stream_id: epoch_id}
+            else {**snap["stream_watermarks"], stream_id: epoch_id}
         ),
         column_mapping=new_mapping,
     )
@@ -641,7 +641,7 @@ def _replay_schema_ops(
             m = source.snapshot_meta(v)
         except FileNotFoundError:
             continue  # expired mid-range (CDF horizon enforcement is below)
-        s = m.get("summary") or {}
+        s = m["summary"]
         op = s.get("operation")
         if op == "rename_column":
             old, new = s.get("renamed", [None, None])
@@ -668,10 +668,10 @@ def _source_drop_evidence(source: LakeTable, to_v: int) -> set[str]:
     ``column`` of every surviving ``drop_column`` commit summary (LOGICAL
     name at drop time — exactly what the replica's schema holds)."""
     meta = source.snapshot_meta(to_v)
-    evidence = set(meta.get("dropped_columns", []))
+    evidence = set(meta["dropped_columns"])
     for v in range(1, to_v + 1):
         try:
-            s = source.snapshot_meta(v).get("summary") or {}
+            s = source.snapshot_meta(v)["summary"]
         except (FileNotFoundError, ValueError, KeyError):
             continue
         if s.get("operation") == "drop_column" and s.get("column"):
@@ -692,11 +692,7 @@ def _mirror_schema_drops(dest: LakeTable, source: LakeTable, to_v: int) -> list[
     (including up-to-date ones) so crash recovery converges without new
     source commits."""
     dsnap = dest.snapshot_meta()
-    protected = (
-        set(dsnap.get("key_cols", KEY_COLS))
-        | set(dsnap.get("order_cols", ORDER_COLS))
-        | {dsnap.get("key_col", "conv_id"), "_deleted"}
-    )
+    protected = protected_columns(dsnap)
     src_cols = {
         f["name"] for f in source.snapshot_meta(to_v)["schema"]["fields"]
     }
@@ -712,7 +708,7 @@ def _mirror_schema_drops(dest: LakeTable, source: LakeTable, to_v: int) -> list[
     # before the source dropped it is missing under its LOGICAL name, so
     # translate through the replica's own column_mapping (it learned the
     # rename when it replayed it) before declaring the drop unexplained
-    dmap = dsnap.get("column_mapping") or {}
+    dmap = dsnap["column_mapping"]
     unexplained = [
         c for c in missing if c not in evidence and dmap.get(c, c) not in evidence
     ]
@@ -908,9 +904,7 @@ def _dml_batch(table: LakeTable, condition, assignments: dict | None, op: str):
     snap = table.snapshot_meta()
     types = {f.name: f.dataType for f in T.StructType.fromJson(snap["schema"]).fields}
     for colname, expr in (assignments or {}).items():
-        if colname in set(snap.get("key_cols", KEY_COLS)) | set(
-            snap.get("order_cols", ORDER_COLS)
-        ):
+        if colname in set(snap["key_cols"]) | set(snap["order_cols"]):
             raise ValueError(f"cannot assign key/order column {colname!r}")
         # cast to the table's column type: keeps e.g. a bare NULL (void) or an
         # int literal assigned to a long column from tripping schema evolution

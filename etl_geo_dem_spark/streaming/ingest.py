@@ -82,13 +82,8 @@ def start_cdc_ingest(
         # event identity from TABLE metadata, not hardcoded column names —
         # the stateful dedup must key on whatever this table's merge keys on
         meta = table.snapshot_meta()
-        ident = list(
-            dict.fromkeys(
-                meta.get("key_cols", ["conv_id", "turn_idx"])
-                + meta.get("order_cols", ["ts", "lsn"])
-            )
-        )
-        event_time = meta.get("order_cols", ["ts", "lsn"])[0]
+        ident = list(dict.fromkeys(meta["key_cols"] + meta["order_cols"]))
+        event_time = meta["order_cols"][0]
         stream = stream.withWatermark(
             event_time, dedup_watermark
         ).dropDuplicatesWithinWatermark(ident)

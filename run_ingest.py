@@ -107,7 +107,6 @@ def main(argv=None):
 
     cfg = EngineConfig(
         dedup_strategy=args.strategy,
-        n_buckets=args.n_buckets,
         merge_mode=args.merge_mode,
     )
     spark = get_spark(master=args.master, app_name="cdc_ingest")
@@ -137,7 +136,7 @@ def main(argv=None):
                     "mode": "kafka",
                     "wall_sec": round(time.time() - t0, 2),
                     "snapshot_version": t.current_version(),
-                    "stream_watermarks": t.snapshot_meta().get("stream_watermarks", {}),
+                    "stream_watermarks": t.snapshot_meta()["stream_watermarks"],
                     "final_rows": t.read_public().count(),
                 }
             )
@@ -157,7 +156,7 @@ def main(argv=None):
             fail_on_violation=args.fail_on_violation,
         )
         q.awaitTermination()
-        sid_watermarks = t.snapshot_meta().get("stream_watermarks", {})
+        sid_watermarks = t.snapshot_meta()["stream_watermarks"]
         print(
             json.dumps(
                 {

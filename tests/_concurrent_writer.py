@@ -35,7 +35,7 @@ def main():
     )
     table = LakeTable(spark, path)
     ch = stream(spark, prefix, n_epochs)
-    cfg = EngineConfig(merge_mode="mor", n_buckets=4)
+    cfg = EngineConfig(merge_mode="mor")
     for e in range(n_epochs):
         m = apply_changes(
             table, ch.filter(F.col("epoch") == e), e, cfg,

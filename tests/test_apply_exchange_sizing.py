@@ -52,8 +52,7 @@ def test_mor_apply_tasks_follow_shuffle_partitions(spark, warehouse, fused):
     }
     # "agg" takes the fused plan; "window" the two-exchange one
     cfg = EngineConfig(
-        merge_mode="mor", n_buckets=N_BUCKETS,
-        dedup_strategy="agg" if fused else "window",
+        merge_mode="mor", dedup_strategy="agg" if fused else "window"
     )
 
     group = f"exchange-sizing-{fused}"

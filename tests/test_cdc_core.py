@@ -231,6 +231,21 @@ def test_commit_conflict_optimistic_concurrency(spark, warehouse):
         table._commit_snapshot({**snap, "version": 2})
 
 
+def test_commit_without_epoch_keeps_the_batch_watermark(spark, warehouse):
+    """A commit whose summary names no epoch carries the parent's batch
+    watermark forward, like the stream watermarks: no summary at all must
+    not break last_epoch(), and a summary without epoch_id must not reset
+    it to -1 (which would re-apply committed epochs on replay)."""
+    table = _mk_table(spark, warehouse)
+    table.commit([], summary={"operation": "noop", "epoch_id": 5})
+    table.commit([])
+    assert table.last_epoch() == 5
+    assert table.table_metrics()["last_epoch"] == 5
+    table.commit([], summary={"operation": "noop"})
+    assert table.last_epoch() == 5
+    assert table.snapshot_meta()["summary"]["operation"] == "noop"
+
+
 def test_bucket_pruning_copy_on_write(spark, warehouse):
     ch = _changes(spark, 2000, n_conv=200, n_epochs=4, evolve_from_epoch=None)
     table = _mk_table(spark, warehouse, n_buckets=16)

@@ -35,7 +35,7 @@ from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import generate_changes
 
 BACKENDS = [PosixCommitBackend, ObjectStoreCommitBackend]
-CFG = EngineConfig(merge_mode="mor", n_buckets=4)
+CFG = EngineConfig(merge_mode="mor")
 
 
 @pytest.fixture(params=BACKENDS, ids=lambda c: c.name)

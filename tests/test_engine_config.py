@@ -13,6 +13,7 @@ def test_unknown_mode_or_strategy_is_a_value_error(kwargs):
         EngineConfig(**kwargs)
 
 
-def test_removed_field_is_a_type_error():
-    with pytest.raises(TypeError):
-        EngineConfig(epoch_manifest_async=True)
+@pytest.mark.parametrize("field", ["epoch_manifest_async", "n_buckets"])
+def test_removed_field_is_a_type_error(field):
+    with pytest.raises(TypeError, match=field):
+        EngineConfig(**{field: 1})

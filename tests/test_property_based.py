@@ -72,7 +72,7 @@ def test_replay_equals_reference_fold_on_arbitrary_streams(
         spark, os.path.join(str(wh), "t"), STATE_SCHEMA, n_buckets=2
     )
     changes = spark.createDataFrame(rows, CHANGE_SCHEMA)
-    replay(table, changes, EngineConfig(merge_mode=merge_mode, n_buckets=2))
+    replay(table, changes, EngineConfig(merge_mode=merge_mode))
 
     got = [
         {

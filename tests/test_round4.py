@@ -25,7 +25,7 @@ from etl_geo_dem_spark.plans.merge import (
 from etl_geo_dem_spark.schemas import CHANGE_SCHEMA, STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import generate_changes
 
-CFG = EngineConfig(merge_mode="mor", n_buckets=8)
+CFG = EngineConfig(merge_mode="mor")
 
 
 def _mk_table(spark, warehouse, name="t", n_epochs=2, n=4000, cfg=CFG):
@@ -105,7 +105,7 @@ def test_snapshot_json_size_independent_of_file_count(spark, warehouse):
     reference — snapshot JSON stays O(refs), old sidecars are never
     re-serialized, and total commit metadata is flat as files accumulate."""
     t = LakeTable.create(spark, os.path.join(warehouse, "flat"), STATE_SCHEMA, n_buckets=8)
-    cfg = EngineConfig(merge_mode="mor", n_buckets=8, max_deltas_per_bucket=0)  # no auto-fold
+    cfg = EngineConfig(merge_mode="mor", max_deltas_per_bucket=0)  # no auto-fold
     sizes, sidecar_mtimes = [], {}
     for e in range(6):
         ch = generate_changes(spark, 1500, n_conv=40, n_epochs=1, n_partitions=4)
@@ -130,7 +130,7 @@ def test_snapshot_json_size_independent_of_file_count(spark, warehouse):
 def test_manifest_coalescing_bounds_ref_list(spark, warehouse, monkeypatch):
     monkeypatch.setattr(LakeTable, "MAX_MANIFESTS", 3)
     t = LakeTable.create(spark, os.path.join(warehouse, "coal"), STATE_SCHEMA, n_buckets=4)
-    cfg = EngineConfig(merge_mode="mor", n_buckets=4, max_deltas_per_bucket=0)
+    cfg = EngineConfig(merge_mode="mor", max_deltas_per_bucket=0)
     counts = None
     for e in range(6):
         ch = generate_changes(spark, 800, n_conv=30, n_epochs=1, n_partitions=4)
@@ -144,7 +144,7 @@ def test_manifest_coalescing_bounds_ref_list(spark, warehouse, monkeypatch):
     for e in range(6):
         ch = generate_changes(spark, 800, n_conv=30, n_epochs=1, n_partitions=4)
         apply_changes(t2, ch.withColumn("epoch", F.lit(e).cast("long")), e,
-                      EngineConfig(merge_mode="mor", n_buckets=4, max_deltas_per_bucket=0))
+                      EngineConfig(merge_mode="mor", max_deltas_per_bucket=0))
     a = t.read_public().orderBy("conv_id", "turn_idx").toPandas()
     b = t2.read_public().orderBy("conv_id", "turn_idx").toPandas()
     assert a["text"].tolist() == b["text"].tolist()
@@ -178,13 +178,18 @@ def test_one_snapshot_parse_per_commit_attempt(spark, warehouse, monkeypatch):
 
 def test_legacy_inline_files_snapshot_upgrades_in_place(spark, warehouse):
     """A table written by the pre-manifest-tier engine (snapshot JSON holds
-    the file list INLINE) must read correctly after the upgrade and migrate
-    to sidecars on its first new commit — never silently read as empty."""
+    the file list INLINE, and none of the later metadata fields) must read
+    correctly after the upgrade and migrate to sidecars on its first new
+    commit — never silently read as empty."""
     t, _ = _mk_table(spark, warehouse, name="legacy")
     rows = t.read_public().count()
     # rewrite the current snapshot in the legacy on-disk shape
     snap = t.snapshot()  # meta + materialized files
-    legacy = {k: v for k, v in snap.items() if k != "manifests"}
+    later_fields = {
+        "manifests", "key_col", "key_cols", "order_cols",
+        "stream_watermarks", "dropped_columns", "column_mapping",
+    }
+    legacy = {k: v for k, v in snap.items() if k not in later_fields}
     v = snap["version"]
     os.remove(t._snap_path(v))
     with open(t._snap_path(v), "w") as f:
@@ -199,6 +204,8 @@ def test_legacy_inline_files_snapshot_upgrades_in_place(spark, warehouse):
     assert m["status"] == "committed"
     new_meta = t2.snapshot_meta()
     assert all("inline" not in r for r in new_meta["manifests"])  # migrated
+    assert new_meta["key_cols"] == ["conv_id", "turn_idx"]
+    assert new_meta["order_cols"] == ["ts", "lsn"]
     assert t2.read_public().count() >= rows
     # and the migrated table clones
     c = t2.clone(os.path.join(warehouse, "legacy_clone"))
@@ -209,7 +216,7 @@ def test_legacy_inline_files_snapshot_upgrades_in_place(spark, warehouse):
 
 def test_expire_snapshots_bounds_history_and_truncates_cdf(spark, warehouse):
     t = LakeTable.create(spark, os.path.join(warehouse, "exp"), STATE_SCHEMA, n_buckets=4)
-    cfg = EngineConfig(merge_mode="mor", n_buckets=4)
+    cfg = EngineConfig(merge_mode="mor")
     for e in range(8):
         ch = generate_changes(spark, 600, n_conv=20, n_epochs=1, n_partitions=4)
         apply_changes(t, ch.withColumn("epoch", F.lit(e).cast("long")), e, cfg)
@@ -264,7 +271,7 @@ def test_delete_where_key_predicate_prunes_to_one_bucket(spark, warehouse, monke
     """Directive 5 'done' criterion: a single-key delete_where reads only that
     key's bucket (stats filter on the key attached), and the result is
     identical to the full-scan path."""
-    cfg = EngineConfig(merge_mode="cow", n_buckets=8)
+    cfg = EngineConfig(merge_mode="cow")
     t, _ = _mk_table(spark, warehouse, name="dmlp", cfg=cfg)
     key_val = t.read_public().select("conv_id").first()[0]
     expected_bucket = t.bucket_of(key_val)
@@ -338,7 +345,7 @@ def test_prune_files_never_drops_nan_bearing_float_files():
 
 
 def test_float_stats_marked_and_nan_rows_survive_pruned_read(spark, warehouse):
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     t = LakeTable.create(spark, os.path.join(warehouse, "nan"), STATE_SCHEMA, n_buckets=4)
     ts = datetime.datetime(2026, 1, 1)
     # NaN rows concentrated in ONE conv-id: only its bucket's file carries
@@ -376,7 +383,7 @@ def test_float_stats_marked_and_nan_rows_survive_pruned_read(spark, warehouse):
 # ------------------------------------------------------------- tag/vacuum race
 
 def test_create_tag_detects_vacuumed_snapshot(spark, warehouse):
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     t, _ = _mk_table(spark, warehouse, name="tagrace", n_epochs=3, cfg=cfg)
     old = t.current_version() - 2
     t.vacuum(keep_versions=1, orphan_grace_sec=0.0)
@@ -388,7 +395,7 @@ def test_create_tag_detects_vacuumed_snapshot(spark, warehouse):
 # ------------------------------------------- sync_from drop-mirror on recovery
 
 def test_sync_from_mirrors_drop_on_up_to_date_path(spark, warehouse, monkeypatch):
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     src = LakeTable.create(spark, os.path.join(warehouse, "ms"), STATE_SCHEMA, n_buckets=4)
     ts = datetime.datetime(2026, 1, 1)
     schema = T.StructType(
@@ -430,7 +437,7 @@ def _table_with_score(spark, warehouse, name, cfg):
 
 
 def test_rename_column_metadata_only_data_survives(spark, warehouse):
-    cfg = EngineConfig(merge_mode="mor", n_buckets=4)
+    cfg = EngineConfig(merge_mode="mor")
     t, sch, ts = _table_with_score(spark, warehouse, "ren", cfg)
     files_before = [f["path"] for f in t.snapshot()["files"]]
     t.rename_column("score", "quality")
@@ -465,7 +472,7 @@ def test_rename_column_metadata_only_data_survives(spark, warehouse):
 
 
 def test_readd_after_drop_gets_fresh_physical_no_ghosts(spark, warehouse):
-    cfg = EngineConfig(merge_mode="mor", n_buckets=4)
+    cfg = EngineConfig(merge_mode="mor")
     t, sch, ts = _table_with_score(spark, warehouse, "ghost", cfg)
     t.rename_column("score", "quality")
     t.drop_column("quality")
@@ -490,7 +497,7 @@ def test_readd_after_drop_gets_fresh_physical_no_ghosts(spark, warehouse):
 
 
 def test_sync_from_replays_rename_without_data_loss(spark, warehouse):
-    cfg = EngineConfig(merge_mode="mor", n_buckets=4)
+    cfg = EngineConfig(merge_mode="mor")
     src, sch, ts = _table_with_score(spark, warehouse, "rsrc", cfg)
     dest = LakeTable.create(spark, os.path.join(warehouse, "rdst"), STATE_SCHEMA, n_buckets=4)
     sync_from(dest, src, cfg)
@@ -509,7 +516,7 @@ def test_mapped_read_keeps_pushdown_and_pruning(spark, warehouse):
     """The physical→logical alias projection must fold into the scan: filters
     on the RENAMED logical column still reach the parquet reader as data
     filters on the physical column, and unused columns stay pruned."""
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     t, sch, ts = _table_with_score(spark, warehouse, "pushdown", cfg)
     t.rename_column("score", "quality")
     df = t.read_public().filter(F.col("quality") > 25.0).select("conv_id", "quality")
@@ -579,7 +586,7 @@ def test_stream_ingest_non_default_keys_derives_dedup_identity(spark, warehouse,
     spark.createDataFrame(rows, change).coalesce(1).write.parquet(src)
     q = start_cdc_ingest(
         spark, t, src, change, str(tmp_path / "nk_ckpt"),
-        cfg=EngineConfig(merge_mode="cow", n_buckets=4),
+        cfg=EngineConfig(merge_mode="cow"),
         dedup_watermark="10 minutes",
     )
     q.awaitTermination(120)
@@ -717,7 +724,7 @@ def test_start_kafka_cdc_ingest_end_to_end(spark, warehouse, tmp_path):
     q = start_kafka_cdc_ingest(
         spark, t, topic="cdc.transcripts",
         checkpoint_dir=str(tmp_path / "kafka_ckpt"),
-        cfg=EngineConfig(merge_mode="mor", n_buckets=4),
+        cfg=EngineConfig(merge_mode="mor"),
         kafka_df=_rate_kafka_shaped(spark),
         stream_id="kafka-test",
     )

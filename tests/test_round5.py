@@ -20,7 +20,7 @@ from etl_geo_dem_spark.plans.merge import apply_changes, delete_where, sync_from
 from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import generate_changes
 
-CFG = EngineConfig(merge_mode="mor", n_buckets=8)
+CFG = EngineConfig(merge_mode="mor")
 
 
 def _mk_table(spark, warehouse, name="t", n_epochs=2, n=3000, cfg=CFG):
@@ -158,6 +158,11 @@ def test_transient_oserror_does_not_quarantine_committed_snapshot(spark, warehou
     t, _ = _mk_table(spark, warehouse, "oserr")
     real = t.current_version()
     t._write_pointer(real - 1)  # crash-between-link-and-swap state
+    # the committer died, so the repairing reader runs in a fresh process:
+    # its metadata cache is cold and the probe really reads the file
+    from etl_geo_dem_spark.plans import lake_table as lt_mod
+
+    lt_mod._PARSE_CACHE.clear()
     t2 = LakeTable(spark, t.path)
     target = t2._snap_path(real)
     orig = LakeTable._parse_snapshot_file
@@ -206,7 +211,7 @@ def test_legacy_float_stats_without_flag_keep_nan_files(spark, warehouse):
         T.StructType(list(schema.fields) + [
             T.StructField("op", T.StringType()), T.StructField("epoch", T.LongType())]),
     )
-    apply_changes(t, batch, 0, EngineConfig(merge_mode="cow", n_buckets=4))
+    apply_changes(t, batch, 0, EngineConfig(merge_mode="cow"))
     t.compact(cluster_by=["score"])
     for p in glob.glob(os.path.join(t._filelists_dir, "fl-*.json")):
         entries = json.load(open(p))
@@ -234,8 +239,8 @@ def test_delete_where_type_mismatched_literal_still_works(spark, warehouse):
         T.StructType(list(schema.fields) + [
             T.StructField("op", T.StringType()), T.StructField("epoch", T.LongType())]),
     )
-    apply_changes(t, batch, 0, EngineConfig(merge_mode="cow", n_buckets=4))
-    m = delete_where(t, "conv_id = 5", EngineConfig(merge_mode="cow", n_buckets=4))
+    apply_changes(t, batch, 0, EngineConfig(merge_mode="cow"))
+    m = delete_where(t, "conv_id = 5", EngineConfig(merge_mode="cow"))
     assert m["status"] == "committed"
     left = [r["conv_id"] for r in t.read_public().collect()]
     assert left == ["7"]
@@ -249,7 +254,7 @@ def test_sync_refuses_mirror_drop_when_rename_snapshot_expired(spark, warehouse)
     behavior mirror-dropped the column (silent data loss); now the sync
     refuses with a actionable error, and replaying the rename manually
     converges."""
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     schema = T.StructType(
         list(STATE_SCHEMA.fields) + [T.StructField("note", T.StringType(), True)]
     )
@@ -292,7 +297,7 @@ def test_sync_refuses_mirror_drop_when_rename_snapshot_expired(spark, warehouse)
 def test_sync_still_mirrors_drop_with_surviving_evidence(spark, warehouse):
     """The legitimate mirror case keeps working: a drop_column whose summary
     (or tombstone) survives is still mirrored onto the replica."""
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     schema = T.StructType(
         list(STATE_SCHEMA.fields) + [T.StructField("extra", T.StringType(), True)]
     )
@@ -347,7 +352,7 @@ def test_stats_prune_survives_rename(spark, warehouse, monkeypatch):
     schema = T.StructType(
         list(STATE_SCHEMA.fields) + [T.StructField("score", T.LongType(), True)]
     )
-    cfg = EngineConfig(merge_mode="cow", n_buckets=4)
+    cfg = EngineConfig(merge_mode="cow")
     t = LakeTable.create(spark, os.path.join(warehouse, "renprune"), schema, n_buckets=4)
     env = T.StructType(list(schema.fields) + [
         T.StructField("op", T.StringType()), T.StructField("epoch", T.LongType())])
@@ -408,7 +413,8 @@ def test_second_handle_shares_snapshot_parse(spark, warehouse, monkeypatch):
 def test_rewritten_metadata_file_invalidates_shared_cache(spark, warehouse):
     """The shared cache validates by (mtime_ns, size): a snapshot JSON
     rewritten on disk (planted history / external tooling) must be re-parsed
-    by a fresh handle, never served stale."""
+    by a fresh handle AND by the handle that read it before, never served
+    stale."""
     import json as _json
 
     t, _ = _mk_table(spark, warehouse, "stalecheck")
@@ -422,6 +428,22 @@ def test_rewritten_metadata_file_invalidates_shared_cache(spark, warehouse):
         _json.dump(meta, f)
     t2 = LakeTable(spark, t.path)
     assert t2.snapshot_meta(v).get("planted_marker") == "rewritten"
+    assert t.snapshot_meta(v).get("planted_marker") == "rewritten"
+
+
+def test_snapshot_expired_by_another_handle_raises(spark, warehouse):
+    """A snapshot one handle expired is gone for every handle in the
+    process: the handle that read it earlier raises the documented
+    "expired" error too, instead of serving its old parse."""
+    t, _ = _mk_table(spark, warehouse, "expireshared")
+    a = LakeTable(spark, t.path)
+    assert a.snapshot_meta(1)["version"] == 1
+    b = LakeTable(spark, t.path)
+    b.expire_snapshots(keep_versions=1)
+    with pytest.raises(FileNotFoundError, match="expired"):
+        b.snapshot_meta(1)
+    with pytest.raises(FileNotFoundError, match="expired"):
+        a.snapshot_meta(1)
 
 
 # ------------------------------- bounded manifest reads (VERDICT r4 nit #3)

@@ -19,7 +19,7 @@ from etl_geo_dem_spark.plans.merge import apply_changes, sync_from
 from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import generate_changes
 
-CFG = EngineConfig(merge_mode="mor", n_buckets=4)
+CFG = EngineConfig(merge_mode="mor")
 
 
 def _mk(spark, warehouse, name="t", n_epochs=2):

@@ -21,7 +21,7 @@ from etl_geo_dem_spark.sources.changes import epoch_batches, generate_changes
 def _cfg(fused: bool) -> EngineConfig:
     """The fused plan, or the two-exchange ``window`` plan it must equal."""
     return EngineConfig(
-        dedup_strategy="agg" if fused else "window", merge_mode="mor", n_buckets=8
+        dedup_strategy="agg" if fused else "window", merge_mode="mor"
     )
 
 
