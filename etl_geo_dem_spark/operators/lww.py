@@ -26,16 +26,24 @@ Three physical strategies for the same logical result (``STRATEGIES``):
                with ties, engines without WindowGroupLimit, skewed joins).
 
 All three are pure pyspark.sql expressions — no Python in the hot path.
+
+``lww_winners_arrow`` is the same fold over a driver-side Arrow table, for
+inputs too small to be worth a Spark job (``LakeTable.point_lookup`` reads a
+few KB of pruned files and resolves them here).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 STRATEGIES = ("agg", "window", "salted_window")
 
@@ -70,6 +78,43 @@ def lww_winners_agg(
     return winners.select(
         *key_cols, *[F.col(f"_w.{c}").alias(c) for c in rest]
     ).select(*df.columns)
+
+
+def lww_winners_arrow(
+    table: pa.Table,
+    key_cols: Sequence[str] = KEY_COLS,
+    order_cols: Sequence[str] = ORDER_COLS,
+) -> pa.Table:
+    """The :func:`lww_winners_agg` result for an Arrow table, in one
+    vectorised pass on the driver: sort by key ascending and ``order_cols``
+    descending, then keep the first row of each key, whole.
+
+    A null order value sorts last, i.e. lowest, as in ``max_by``'s struct
+    ordering. The winner is taken by row index rather than by a per-column
+    ``first`` aggregate, which skips nulls and would take a losing version's
+    non-null value where the winner's is null. Winners come out in key order.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if table.num_rows == 0:
+        return table
+    ranked = table.take(
+        pc.sort_indices(
+            table,
+            sort_keys=[(c, "ascending") for c in key_cols]
+            + [(c, "descending") for c in order_cols],
+            null_placement="at_end",
+        )
+    )
+    pos = ranked.select(list(key_cols)).append_column(
+        "_pos", pa.array(np.arange(ranked.num_rows))
+    )
+    first = pos.group_by(list(key_cols), use_threads=False).aggregate(
+        [("_pos", "min")]
+    )["_pos_min"]
+    return ranked.take(np.sort(first.to_numpy()))
 
 
 def lww_winners_window(

@@ -780,6 +780,46 @@ class LakeTable:
             ]
         )
 
+    def _pruned_files(
+        self,
+        snap: dict[str, Any],
+        schema: T.StructType,
+        buckets: list[int] | None,
+        stats_filters: dict[str, tuple[Any, Any]] | None,
+        resolve: bool,
+    ) -> list[dict[str, Any]]:
+        """The data files of ``snap`` a read must open: those in ``buckets``
+        (all when ``None``) whose min/max stats overlap ``stats_filters``.
+        The one file selection behind :meth:`read` and :meth:`point_lookup`."""
+        files = self._files_of(snap)
+        if buckets is not None:
+            wanted = set(buckets)
+            files = [f for f in files if f["bucket"] in wanted]
+        if not stats_filters:
+            return files
+        key_cols = set(snap["key_cols"])
+        nonkey = [c for c in stats_filters if c not in key_cols]
+        if nonkey and resolve and any(f["kind"] == "delta" for f in files):
+            raise ValueError(
+                f"stats_filters on non-key columns {nonkey} are unsound while "
+                "delta files are pending (a pruned file could hold the LWW "
+                "winner) — compact() first or filter a full read"
+            )
+        mapping = snap["column_mapping"]
+        return prune_files(
+            files,
+            stats_filters,
+            # schema-derived float-ness: covers legacy files whose stats
+            # predate the per-file 'float' flag (NaN-vs-max soundness)
+            float_cols={
+                f.name
+                for f in schema.fields
+                if isinstance(f.dataType, (T.FloatType, T.DoubleType))
+            },
+            # renamed columns: fall back to stats keyed by the birth name
+            stats_alias={c: p for c, p in mapping.items() if p != c},
+        )
+
     def read(
         self,
         version: int | str | None = None,
@@ -815,35 +855,7 @@ class LakeTable:
         """
         snap = self.snapshot_meta(version)
         schema = T.StructType.fromJson(snap["schema"])
-        files = self._files_of(snap)
-        if buckets is not None:
-            wanted = set(buckets)
-            files = [f for f in files if f["bucket"] in wanted]
-        if stats_filters:
-            key_cols = set(snap["key_cols"])
-            nonkey = [c for c in stats_filters if c not in key_cols]
-            if nonkey and resolve and any(
-                f["kind"] == "delta" for f in files
-            ):
-                raise ValueError(
-                    f"stats_filters on non-key columns {nonkey} are unsound while "
-                    "delta files are pending (a pruned file could hold the LWW "
-                    "winner) — compact() first or filter a full read"
-                )
-            mapping = snap["column_mapping"]
-            files = prune_files(
-                files,
-                stats_filters,
-                # schema-derived float-ness: covers legacy files whose stats
-                # predate the per-file 'float' flag (NaN-vs-max soundness)
-                float_cols={
-                    f.name
-                    for f in schema.fields
-                    if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-                },
-                # renamed columns: fall back to stats keyed by the birth name
-                stats_alias={c: p for c, p in mapping.items() if p != c},
-            )
+        files = self._pruned_files(snap, schema, buckets, stats_filters, resolve)
         if not files:
             df = self.spark.createDataFrame([], schema)
         elif not (resolve and any(f["kind"] == "delta" for f in files)):
@@ -2149,25 +2161,57 @@ class LakeTable:
         )
         return sorted({r["b"] for r in rows})
 
-    def point_lookup(self, key_value: Any, version: int | None = None) -> DataFrame:
-        """Single-key lookup that prunes on EVERY metadata tier before a byte
-        of data is read: snapshot → one bucket (hash of the key) → within the
-        bucket, only files whose recorded [min, max] key range covers the value
-        (rolled files are key-sorted and disjoint, so typically exactly one),
-        and the residual equality predicate pushes into the parquet scan where
-        the key-sorted row groups prune again. The reference analog is the
-        indexed tile lookup (`pipeline_load_localPG.py:46-47` ``-I`` index);
-        the Iceberg analog is metadata-table + manifest-stats scan planning.
+    def point_lookup(
+        self, key_value: Any, version: int | str | None = None
+    ) -> DataFrame:
+        """The live rows of one key column value at ``version`` (a version
+        number or a tag), as :meth:`read` filtered on the key would return
+        them — with no Spark job.
 
-        Correct under merge-on-read: key-column pruning keeps every version of
-        every matching key, so LWW resolution sees the full history."""
-        key = self.key_col()
-        b = self.bucket_of(key_value, int(self.snapshot_meta(version)["n_buckets"]))
-        return self.read(
-            version=version,
-            buckets=[b],
-            stats_filters={key: (key_value, key_value)},
+        The files come from metadata alone, through the same selection as
+        :meth:`read`: snapshot → the key's bucket (the driver-side xxhash64
+        twin, :meth:`bucket_of`) → the files whose recorded key min/max covers
+        the value. Key pruning keeps every stored version of the key, so
+        merge-on-read resolution sees its whole history. pyarrow reads just
+        those files, with the key equality pushed into the row-group filter,
+        under the snapshot's physical column names; columns that a file
+        predates come back null. :func:`lww_winners_arrow` folds the versions
+        to one winner per table key, deleted winners are dropped, and the
+        result is a local relation in the logical schema: collecting it
+        runs no Spark job."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from etl_geo_dem_spark.operators.lww import lww_winners_arrow
+
+        snap = self.snapshot_meta(version)
+        schema = T.StructType.fromJson(snap["schema"])
+        key = snap["key_col"]
+        files = self._pruned_files(
+            snap,
+            schema,
+            [self.bucket_of(key_value, int(snap["n_buckets"]))],
+            {key: (key_value, key_value)},
+            resolve=True,
         )
+        mapping = snap["column_mapping"]
+        phys = to_arrow_schema(physical_schema(schema, mapping))
+        if files:
+            stored = pq.read_table(
+                [f["path"] for f in files],
+                schema=phys,
+                columns=phys.names,
+                filters=[(mapping.get(key, key), "==", key_value)],
+            )
+        else:
+            stored = phys.empty_table()
+        rows = lww_winners_arrow(
+            stored.rename_columns(schema.names), snap["key_cols"], snap["order_cols"]
+        )
+        if "_deleted" in rows.column_names:
+            rows = rows.filter(pc.equal(rows["_deleted"], False))
+        return self.spark.createDataFrame(rows, schema)
 
     def rebucket(self, new_n_buckets: int, retries: int = 2) -> int:
         """Bucket-count evolution: rewrite current live state under a new

@@ -60,9 +60,11 @@ def main():
         table.read_public(),
     )
     add(
-        "Point lookup on the transcript table",
-        "the key predicate reaches the parquet scan as PushedFilters — a serving "
-        "lookup touches row groups whose stats match, nothing else.",
+        "Key-filtered read_public() scan of the transcript table",
+        "the key predicate reaches the parquet scan as PushedFilters — the scan "
+        "touches row groups whose stats match, nothing else. (LakeTable."
+        "point_lookup runs no Spark plan: it reads the pruned files with "
+        "pyarrow and folds LWW on the driver.)",
         table.read_public().filter(
             (F.col("conv_id") == "conv_000001") & (F.col("turn_idx") == 1)
         ),
