@@ -99,7 +99,8 @@ BUCKET_COL = "_bucket"
 # a streaming query's foreachBatch thread and the caller's thread read
 # metadata concurrently. Cross-PROCESS sharing stays the documented rule
 # instead: one handle per process, reuse it — the files themselves are the
-# shared medium and a parse is ~O(100µs).
+# shared medium and a parse is ~O(100µs). The registry's table reader
+# (``queries.registry.t``) keeps its inferred parquet schemas here too.
 _PARSE_CACHE: OrderedDict[str, tuple[tuple[int, int], Any]] = OrderedDict()
 _PARSE_CACHE_MAX = 256
 _PARSE_CACHE_LOCK = threading.Lock()
@@ -765,10 +766,17 @@ class LakeTable:
     def _read_parquet(
         self, snap: dict[str, Any], schema: T.StructType, paths: list[str]
     ) -> DataFrame:
-        """Scan data files under the snapshot's PHYSICAL column names and
-        project back to the LOGICAL schema (a zero-cost alias node Catalyst
-        folds into the scan). With an empty mapping this is exactly the plain
-        schema'd read."""
+        """Scan the snapshot's data files under their PHYSICAL column names
+        and project back to the LOGICAL schema (a zero-cost alias node
+        Catalyst folds into the scan). With an empty mapping this is exactly
+        the plain schema'd read.
+
+        Planning runs no Spark job: the schema is given, and ``get_spark``
+        keeps Spark's listing of the named files on the driver (one stat per
+        file) at any file count. On a session built elsewhere, more than
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default
+        32) files are still listed by a Spark job with one task per file:
+        the result is the same, only slower."""
         mapping = snap["column_mapping"]
         if not any(f.name in mapping for f in schema.fields):
             return self.spark.read.schema(schema).parquet(*paths)

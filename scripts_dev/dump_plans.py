@@ -48,7 +48,10 @@ def main():
     add(
         "Lake read with merge-on-read resolution",
         "base∪delta parquet scan (explicit file list from the snapshot — bucket "
-        "pruning is metadata-only, no directory listing) → SortAggregate pair "
+        "pruning is metadata-only, and no listing job at any file count: "
+        "get_spark keeps Spark's listing of the named files on the driver, one "
+        "stat per file, where above 32 paths it would run a job of one task "
+        "per path — test_read_planning.py) → SortAggregate pair "
         "(the struct ordering key has no fixed-width mutable buffer, so Spark "
         "picks sort-based aggregation) with partial_max_by BEFORE the exchange "
         "— the map-side combine that matters: a hot key collapses to ≤1 row "
