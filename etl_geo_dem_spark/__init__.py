@@ -18,7 +18,7 @@ Layout
 - ``session``      SparkSession factory (AQE, Arrow, UTC, shuffle partitions)
 - ``schemas``      transcript + change-event StructTypes
 - ``config``       engine configuration dataclass
-- ``operators/``   LWW dedup (window + salted two-stage + agg-combine), skew tools,
+- ``operators/``   LWW dedup (agg-combine + window; salted two-stage for queries),
                    doc dedup (minhash/simhash/ngram), similarity search, text analysis,
                    multimodal plumbing
 - ``sources/``     deterministic synthetic CDC generator, manifest/file sources

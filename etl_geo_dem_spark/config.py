@@ -18,16 +18,13 @@ MERGE_MODES = ("cow", "mor")
 class EngineConfig:
     """Tuning knobs for the CDC apply path.
 
-    salt_buckets: fan-out for the salted first stage of LWW dedup on hot keys.
-    hot_key_threshold: a conv_id is "hot" if it carries more than this fraction
-        of the sampled batch (BASELINE: top-1% keys carry ≥50% of events).
-    hot_key_sample: fraction of the batch sampled for hot-key detection
-        (detection must not itself shuffle the full batch).
+    Skew has one knob: ``dedup_strategy``. The default ``"agg"`` combines on
+    the map side; ``"window"`` is the escape for a batch dominated by one key.
+    Explicit salting is not an engine strategy: it measured slower than
+    ``"window"`` on a single-hot-key batch (BENCH/SKEW.md), and survives only
+    as the ``lww_winners_salted_window`` operator.
     """
 
-    salt_buckets: int = 16
-    hot_key_threshold: float = 0.01
-    hot_key_sample: float = 0.1
     # one of operators.lww.STRATEGIES. On MOR, "agg" is planned as ONE
     # exchange by storage bucket, then an aggregate by (bucket, key) that
     # Spark runs without a second exchange (plans/merge.py). The trade: no

@@ -6,26 +6,30 @@ value as "latest level wins" through an iterative per-key stateful scan
 that collapses to a single per-key reduction: ``final(conv_id, turn_idx) =
 argmax_{(ts, lsn)} event`` — SURVEY.md §2.5 W1.
 
-Three physical strategies for the same logical result (``STRATEGIES``):
+Two physical strategies for the same logical result (``STRATEGIES``), both
+selectable as ``EngineConfig.dedup_strategy``:
 
-- ``agg``      ``groupBy(key).agg(max(struct(ts, lsn, payload...)))``. Partial
-               (map-side) aggregation combines locally before the shuffle, so a hot
-               key's millions of events collapse to one row per map task — this is
-               the skew-free default and the plan you want at 10^10 events.
+- ``agg``      ``groupBy(key).agg(max_by(struct(payload...), struct(ts, lsn)))``.
+               Partial (map-side) aggregation combines locally before the
+               shuffle, so a hot key's millions of events collapse to one row per
+               map task — the default and the plan you want at 10^10 events.
 - ``window``   ``row_number() over (partition by key order by ts desc, lsn desc) = 1``.
                On Spark ≥ 3.5 Catalyst rewrites the rank-1 filter into
                ``WindowGroupLimit ... Partial`` BELOW the shuffle — each map task
                forwards only its local winner per key, so this formulation is
                skew-safe too (measured: a 24M-row single hot key costs the same
-               as uniform data; BENCH/SKEW.md).
-- ``salted_window``  two-stage: explicit salt on detected hot keys → rank inside
-               ``(key, salt)`` → re-rank the per-salt winners inside ``key``. The
-               BASELINE-mandated skew defeat (the gap the reference's count-balanced
-               ``split_list`` never fixed, `pipeline_transform_vrt_gdal.py:41-62`).
-               Retained for the cases the built-in rewrites don't cover (rank ≤ k
-               with ties, engines without WindowGroupLimit, skewed joins).
+               as uniform data; BENCH/SKEW.md). The engine's escape for a batch
+               dominated by one key.
 
-All three are pure pyspark.sql expressions — no Python in the hot path.
+``lww_winners_salted_window`` is a third formulation kept as an operator only
+(the ``zz_cdc_lww_latest_salted`` registry query calls it): an explicit salt
+splits every key, a rank inside ``(key, salt)``, then a re-rank inside ``key``.
+It is the textbook skew defeat that the reference's count-balanced
+``split_list`` never had (`pipeline_transform_vrt_gdal.py:41-62`), but on a
+single-hot-key batch it measured slower than ``window``, so the engine does
+not dispatch to it (BENCH/SKEW.md).
+
+All of them are pure pyspark.sql expressions — no Python in the hot path.
 
 ``lww_winners_arrow`` is the same fold over a driver-side Arrow table, for
 inputs too small to be worth a Spark job (``LakeTable.point_lookup`` reads a
@@ -45,7 +49,7 @@ from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
 if TYPE_CHECKING:
     import pyarrow as pa
 
-STRATEGIES = ("agg", "window", "salted_window")
+STRATEGIES = ("agg", "window")
 
 
 def _desc_order(order_cols: Sequence[str]) -> list[Column]:
@@ -136,24 +140,16 @@ def lww_winners_salted_window(
     key_cols: Sequence[str] = KEY_COLS,
     order_cols: Sequence[str] = ORDER_COLS,
     salt_buckets: int = 16,
-    hot_keys: Sequence[str] | None = None,
-    hot_key_col: str | None = None,
 ) -> DataFrame:
     """Two-stage salted LWW rank for skewed key distributions.
 
-    Stage 1 partitions hot keys into ``salt_buckets`` sub-partitions (salt derived
-    from ``xxhash64(lsn)`` so it is deterministic and spreads uniformly), keeping
-    one winner per ``(key, salt)``; stage 2 re-ranks the ≤``salt_buckets`` winners
-    per key. Cold keys take salt 0 and pass through stage 1 unsplit.
-
-    If ``hot_keys`` is None every key is salted (safe, slightly more stage-2 work).
+    Stage 1 splits every key into ``salt_buckets`` sub-partitions (salt derived
+    from ``xxhash64(order_cols)`` so it is deterministic and spreads uniformly),
+    keeping one winner per ``(key, salt)``; stage 2 re-ranks the
+    ≤``salt_buckets`` winners per key.
     """
-    hot_key_col = hot_key_col or key_cols[0]
     salt_src = F.xxhash64(*[F.col(c) for c in order_cols])
     salt = F.pmod(salt_src, F.lit(salt_buckets)).cast("int")
-    if hot_keys is not None:
-        is_hot = F.col(hot_key_col).isin(list(hot_keys))
-        salt = F.when(is_hot, salt).otherwise(F.lit(0))
     salted = df.withColumn("_salt", salt)
     w1 = Window.partitionBy(*key_cols, "_salt").orderBy(*_desc_order(order_cols))
     stage1 = (
@@ -174,16 +170,10 @@ def lww_winners(
     key_cols: Sequence[str] = KEY_COLS,
     order_cols: Sequence[str] = ORDER_COLS,
     strategy: str = "agg",
-    salt_buckets: int = 16,
-    hot_keys: Sequence[str] | None = None,
 ) -> DataFrame:
     """Dispatch over the physical strategies (identical logical result)."""
     if strategy == "agg":
         return lww_winners_agg(df, key_cols, order_cols)
     if strategy == "window":
         return lww_winners_window(df, key_cols, order_cols)
-    if strategy == "salted_window":
-        return lww_winners_salted_window(
-            df, key_cols, order_cols, salt_buckets=salt_buckets, hot_keys=hot_keys
-        )
     raise ValueError(f"unknown LWW strategy {strategy!r}; expected one of {STRATEGIES}")

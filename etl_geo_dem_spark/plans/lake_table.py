@@ -211,6 +211,23 @@ class CommitConflict(Exception):
     """Another writer committed this version first (optimistic concurrency)."""
 
 
+def retrying_commit(build_and_commit: Callable[[], Any], retries: int) -> Any:
+    """Optimistic-concurrency retry loop shared by the CDC apply and the
+    maintenance rewrites: on :class:`CommitConflict`, ``build_and_commit``
+    runs again, re-reading the (new) snapshot and re-deriving its files from
+    it — never commit files computed from a stale base, or the interloper's
+    rows would vanish. Orphaned data files from losing attempts are reaped by
+    :meth:`LakeTable.vacuum`."""
+    attempt = 0
+    while True:
+        try:
+            return build_and_commit()
+        except CommitConflict:
+            if attempt >= retries:
+                raise
+            attempt += 1
+
+
 def _stat_to_json(v):
     """Parquet footer min/max → a JSON-storable, order-preserving scalar.
 
@@ -1453,21 +1470,6 @@ class LakeTable:
             "retained_versions": sorted(set(survivors) - set(removed_snaps)),
         }
 
-    def _retrying_commit(self, build_and_commit, retries: int):
-        """Optimistic-concurrency retry loop shared by the maintenance
-        rewrites: on :class:`CommitConflict`, re-read the (new) snapshot and
-        re-derive the rewrite from it — never commit files computed from a
-        stale base, or the interloper's rows would vanish. Orphaned data files
-        from losing attempts are reaped by :meth:`vacuum`."""
-        attempt = 0
-        while True:
-            try:
-                return build_and_commit()
-            except CommitConflict:
-                if attempt >= retries:
-                    raise
-                attempt += 1
-
     def _rewrite(
         self,
         operation: str,
@@ -1517,7 +1519,7 @@ class LakeTable:
                 column_mapping={} if full else None,
             )
 
-        return self._retrying_commit(attempt, retries)
+        return retrying_commit(attempt, retries)
 
     def expire_tombstones(self, below_lsn: int, retries: int = 2) -> int:
         """GC delete markers older than a safety horizon.
@@ -2064,7 +2066,7 @@ class LakeTable:
                 column_mapping=mapping,
             )
 
-        return self._retrying_commit(attempt, retries)
+        return retrying_commit(attempt, retries)
 
     def rename_column(self, old: str, new: str, retries: int = 2) -> int:
         """METADATA-ONLY column rename (Iceberg rename semantics, built on
@@ -2121,7 +2123,7 @@ class LakeTable:
                 column_mapping=mapping,
             )
 
-        return self._retrying_commit(attempt, retries)
+        return retrying_commit(attempt, retries)
 
     # ------------------------------------------------- layout / history evolution
     def bucket_of(self, key_value: Any, n_buckets: int | None = None) -> int:
@@ -2294,4 +2296,4 @@ class LakeTable:
                 column_mapping=dict(target["column_mapping"]),
             )
 
-        return self._retrying_commit(attempt, retries)
+        return retrying_commit(attempt, retries)

@@ -43,13 +43,14 @@ from pyspark.sql import types as T
 
 from etl_geo_dem_spark.config import EngineConfig
 from etl_geo_dem_spark.operators.lww import lww_winners
-from etl_geo_dem_spark.operators.skew import detect_hot_keys
 from etl_geo_dem_spark.plans.lake_table import (
     BUCKET_COL,
+    CommitConflict,
     LakeTable,
     bucket_expr,
     carry_excluding,
     protected_columns,
+    retrying_commit,
 )
 
 ENVELOPE_COLS = {"op", "epoch"}
@@ -216,19 +217,13 @@ def apply_changes(
     whole merge re-derives from the NEW snapshot and retries, Iceberg-style
     optimistic concurrency. The conflicting attempt's data files become
     unreferenced orphans that :meth:`LakeTable.vacuum` reaps."""
-    from etl_geo_dem_spark.plans.lake_table import CommitConflict
-
-    attempt = 0
-    while True:
-        try:
-            return _apply_changes_once(
-                table, batch, epoch_id, cfg, extra_manifest, stream_id,
-                expectations, fail_on_violation,
-            )
-        except CommitConflict:
-            if attempt >= retries:
-                raise
-            attempt += 1
+    return retrying_commit(
+        lambda: _apply_changes_once(
+            table, batch, epoch_id, cfg, extra_manifest, stream_id,
+            expectations, fail_on_violation,
+        ),
+        retries,
+    )
 
 
 def _apply_changes_once(
@@ -318,12 +313,7 @@ def _apply_changes_once(
         )
     batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events"), *exp_metrics)
 
-    hot_keys = None
     strategy = cfg.dedup_strategy
-    if strategy == "salted_window":
-        hot_keys = detect_hot_keys(
-            batch, key_cols[0], cfg.hot_key_threshold, cfg.hot_key_sample
-        )
     fused = strategy == "agg" and cfg.merge_mode == "mor"
     if fused:
         # fused-exchange MOR apply (round 6, guide §2.4 "two operations keyed
@@ -345,10 +335,7 @@ def _apply_changes_once(
             [BUCKET_COL, *key_cols], order_cols, strategy="agg",
         )
     else:
-        winners = lww_winners(
-            batch, key_cols, order_cols, strategy=strategy,
-            salt_buckets=cfg.salt_buckets, hot_keys=hot_keys,
-        )
+        winners = lww_winners(batch, key_cols, order_cols, strategy=strategy)
     batch_state = _to_state_shape(winners, evolved).withColumn(
         BUCKET_COL, bucket_expr(bucket_key, n_buckets)
     )
@@ -457,8 +444,6 @@ def _apply_changes_once(
     # The epoch is already committed at this point, so a compaction conflict
     # (after its own internal retries) must NOT bubble up as a merge conflict —
     # the fold is maintenance and safely deferred to the next epoch.
-    from etl_geo_dem_spark.plans.lake_table import CommitConflict
-
     compacted_buckets: list[int] = []
     if cfg.merge_mode == "mor" and cfg.max_deltas_per_bucket > 0:
         over = [
@@ -486,7 +471,6 @@ def _apply_changes_once(
         "merge_mode": cfg.merge_mode,
         "compacted_buckets": compacted_buckets,
         "dedup_strategy": strategy,
-        "hot_keys_detected": len(hot_keys) if hot_keys is not None else None,
         "lineage": _bucket_lineage(new_files),
         "duration_sec": round(time.time() - t0, 3),
         "phase_sec": {
@@ -929,8 +913,6 @@ def _apply_dml(table: LakeTable, batch_builder, cfg: EngineConfig, retries: int 
     were derived from a snapshot the winner just replaced, so the batch is
     rebuilt from scratch too (``batch_builder`` closes over the predicate,
     not the data)."""
-    from etl_geo_dem_spark.plans.lake_table import CommitConflict
-
     for _ in range(retries + 1):
         epoch = table.last_stream_epoch(DML_STREAM) + 1
         try:

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_geo_dem_spark.config import EngineConfig
-from etl_geo_dem_spark.operators.lww import lww_winners
+from etl_geo_dem_spark.operators.lww import lww_winners, lww_winners_salted_window
 from etl_geo_dem_spark.oracle.replayer import replay_reference
 from etl_geo_dem_spark.plans.lake_table import CommitConflict, LakeTable
 from etl_geo_dem_spark.plans.merge import SchemaEvolutionError, apply_changes, evolve_schema, replay
@@ -46,16 +46,19 @@ def _oracle_pd(changes_df):
 
 def test_lww_strategies_agree(spark):
     ch = _changes(spark, 3000)
-    outs = {}
-    for strat in ("agg", "window", "salted_window"):
-        df = lww_winners(ch, strategy=strat)
-        outs[strat] = (
-            df.orderBy("conv_id", "turn_idx")
-            .select("conv_id", "turn_idx", "ts", "lsn", "op", "text")
-            .toPandas()
-        )
+    frames = {
+        "agg": lww_winners(ch, strategy="agg"),
+        "window": lww_winners(ch, strategy="window"),
+        "salted": lww_winners_salted_window(ch),
+    }
+    outs = {
+        k: df.orderBy("conv_id", "turn_idx")
+        .select("conv_id", "turn_idx", "ts", "lsn", "op", "text")
+        .toPandas()
+        for k, df in frames.items()
+    }
     assert outs["agg"].equals(outs["window"])
-    assert outs["agg"].equals(outs["salted_window"])
+    assert outs["agg"].equals(outs["salted"])
 
 
 def test_replay_matches_reference_oracle(spark, warehouse):
@@ -75,7 +78,7 @@ def test_replay_matches_reference_oracle(spark, warehouse):
     assert got["ts"].tolist() == exp["ts"].tolist()
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window", "salted_window"])
+@pytest.mark.parametrize("strategy", ["agg", "window"])
 def test_replay_strategies_match_oracle(spark, warehouse, strategy):
     ch = _changes(spark, 1500, n_epochs=3, evolve_from_epoch=None)
     table = _mk_table(spark, warehouse, name=f"t_{strategy}")

@@ -7,6 +7,8 @@ must compile to the plans you'd want at 100 TB (SURVEY.md §4):
 - LWW agg combines map-side (partial_max_by below the Exchange — the struct
   ordering key makes the pair SortAggregate, which is fine: the partial
   combine is the scale property, hash-vs-sort is an implementation detail);
+- the engine's ``window`` escape limits map-side too (WindowGroupLimit
+  Partial below the Exchange);
 - merge-on-read reads keep base-only buckets out of the LWW shuffle;
 - no row-at-a-time Python UDFs anywhere (BatchEvalPython absent); the only
   Python is Arrow-batched mapInPandas in the multimodal stubs.
@@ -53,6 +55,24 @@ def test_lww_agg_has_map_side_combine(spark):
     plan = _plan(spark, "zz_cdc_lww_latest_agg")
     assert "partial_max_by" in plan  # map-side combine before the Exchange
     assert plan.index("partial_max_by") > plan.index("Exchange") or "Exchange" in plan
+
+
+def test_lww_window_limits_map_side(spark):
+    """``window`` is the engine's skew escape only because Catalyst plans a
+    map-side ``WindowGroupLimit ... Partial`` below the shuffle: each map task
+    forwards one row per key, so a hot key cannot pile onto one reducer. This
+    is the plan the non-fused apply runs for ``dedup_strategy="window"``."""
+    from etl_geo_dem_spark.operators.lww import lww_winners
+    from etl_geo_dem_spark.sources.changes import generate_changes
+
+    batch = generate_changes(spark, 2000, n_conv=50, n_epochs=1)
+    plan = lww_winners(batch, strategy="window")._jdf.queryExecution().executedPlan()
+    lines = plan.toString().splitlines()
+    first_exchange = next(i for i, line in enumerate(lines) if "Exchange" in line)
+    assert any(
+        "WindowGroupLimit" in line and line.rstrip().endswith("Partial")
+        for line in lines[first_exchange + 1:]
+    )
 
 
 def test_no_row_python_udfs_anywhere(spark):

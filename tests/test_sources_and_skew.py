@@ -5,8 +5,7 @@ import os
 from pyspark.sql import functions as F
 
 from etl_geo_dem_spark.config import EngineConfig
-from etl_geo_dem_spark.operators.lww import lww_winners
-from etl_geo_dem_spark.operators.skew import detect_hot_keys
+from etl_geo_dem_spark.operators.lww import lww_winners, lww_winners_salted_window
 from etl_geo_dem_spark.plans.lake_table import LakeTable
 from etl_geo_dem_spark.plans.merge import replay
 from etl_geo_dem_spark.schemas import CHANGE_SCHEMA, STATE_SCHEMA
@@ -57,37 +56,41 @@ def _one_giant_key(spark, n=4000):
     return base.unionByName(hot)
 
 
-def test_hot_key_detection_finds_giant_key(spark):
-    ch = _one_giant_key(spark)
-    hot = detect_hot_keys(ch, "conv_id", threshold_frac=0.05, sample_frac=1.0)
-    assert "conv_hotspot" in hot
-
-
 def test_all_strategies_agree_under_pathological_skew(spark):
     ch = _one_giant_key(spark)
-    hot = detect_hot_keys(ch, "conv_id", threshold_frac=0.05, sample_frac=1.0)
-    outs = {}
-    for strat in ("agg", "window", "salted_window"):
-        df = lww_winners(ch, strategy=strat, hot_keys=hot if strat == "salted_window" else None)
-        outs[strat] = (
-            df.orderBy("conv_id", "turn_idx")
-            .select("conv_id", "turn_idx", "lsn", "text")
-            .toPandas()
-        )
+    frames = {
+        "agg": lww_winners(ch, strategy="agg"),
+        "window": lww_winners(ch, strategy="window"),
+        "salted": lww_winners_salted_window(ch),
+    }
+    outs = {
+        k: df.orderBy("conv_id", "turn_idx")
+        .select("conv_id", "turn_idx", "lsn", "text")
+        .toPandas()
+        for k, df in frames.items()
+    }
     assert outs["agg"].equals(outs["window"])
-    assert outs["agg"].equals(outs["salted_window"])
+    assert outs["agg"].equals(outs["salted"])
 
 
-def test_replay_with_salted_strategy_under_skew(spark, warehouse):
+def test_replay_one_giant_key_mor_agg_window_and_cow_agree(spark, warehouse):
+    """Engine-level coverage under one hot key: the fused MOR ``agg`` plan
+    (skew granularity = storage bucket), the ``window`` escape and the COW
+    apply reach the same final state."""
     ch = _one_giant_key(spark).withColumn("epoch", F.lit(0))
-    ta = LakeTable.create(spark, os.path.join(warehouse, "sk_a"), STATE_SCHEMA, n_buckets=8)
-    tb = LakeTable.create(spark, os.path.join(warehouse, "sk_b"), STATE_SCHEMA, n_buckets=8)
-    replay(ta, ch, EngineConfig(dedup_strategy="agg"))
-    replay(tb, ch, EngineConfig(dedup_strategy="salted_window", hot_key_sample=1.0, hot_key_threshold=0.05))
-    a = ta.read_public().orderBy("conv_id", "turn_idx").toPandas()
-    b = tb.read_public().orderBy("conv_id", "turn_idx").toPandas()
-    assert a.equals(b)
-    assert (a["conv_id"] == "conv_hotspot").sum() > 0
+    cfgs = {
+        "mor_agg": EngineConfig(merge_mode="mor"),
+        "mor_window": EngineConfig(merge_mode="mor", dedup_strategy="window"),
+        "cow_agg": EngineConfig(merge_mode="cow"),
+    }
+    states = {}
+    for name, cfg in cfgs.items():
+        t = LakeTable.create(spark, os.path.join(warehouse, name), STATE_SCHEMA, n_buckets=8)
+        replay(t, ch, cfg)
+        states[name] = t.read_public().orderBy("conv_id", "turn_idx").toPandas()
+    assert states["mor_agg"].equals(states["mor_window"])
+    assert states["mor_agg"].equals(states["cow_agg"])
+    assert (states["mor_agg"]["conv_id"] == "conv_hotspot").sum() > 0
 
 
 def test_debezium_envelope_adapter(spark, warehouse, tmp_path):
