@@ -25,7 +25,9 @@ class EngineConfig:
     as the ``lww_winners_salted_window`` operator.
     """
 
-    # one of operators.lww.STRATEGIES. On MOR, "agg" is planned as ONE
+    # one of operators.lww.STRATEGIES: it picks among the Spark plans only.
+    # A merge-on-read batch that fits the driver (lake_table.fits_driver) is
+    # folded with pyarrow whatever this says. On MOR, "agg" is planned as ONE
     # exchange by storage bucket, then an aggregate by (bucket, key) that
     # Spark runs without a second exchange (plans/merge.py). The trade: no
     # map-side combine before that shuffle, and skew granularity becomes the

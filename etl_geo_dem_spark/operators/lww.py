@@ -32,8 +32,13 @@ not dispatch to it (BENCH/SKEW.md).
 All of them are pure pyspark.sql expressions — no Python in the hot path.
 
 ``lww_winners_arrow`` is the same fold over a driver-side Arrow table, for
-inputs too small to be worth a Spark job (``LakeTable.point_lookup`` reads a
-few KB of pruned files and resolves them here).
+inputs too small to be worth a Spark job. It serves the point lookup
+(``LakeTable.point_lookup`` reads a few KB of pruned files and resolves them
+here), the streaming tail (a merge-on-read micro-batch that fits the driver
+is folded here by (bucket, key), its output already in the bucket writer's
+order; ``plans/merge.py``) and bucket compaction (``LakeTable.compact_buckets``
+folds each small bucket's base and deltas here). The Spark strategies above
+serve every larger input.
 """
 
 from __future__ import annotations

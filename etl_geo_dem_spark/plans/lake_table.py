@@ -77,7 +77,7 @@ import threading
 import time
 import uuid
 from collections import OrderedDict
-from typing import Any, Callable
+from typing import TYPE_CHECKING, Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,6 +85,9 @@ from pyspark.sql import types as T
 
 from etl_geo_dem_spark.plans.commit_backend import CommitBackend, backend_from_env
 from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 BUCKET_COL = "_bucket"
 
@@ -205,6 +208,74 @@ def protected_columns(meta: dict[str, Any]) -> set[str]:
 def bucket_expr(key_col: str, n_buckets: int):
     """Deterministic storage bucket of a key (stable across engines/sessions)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+# The largest input, in parquet bytes, that a merge-on-read apply or a bucket
+# compaction folds and writes on the driver with pyarrow instead of running a
+# Spark plan (``fits_driver``). Set from a size sweep of both paths at
+# local[4] on a 4-vCPU host, medians of 3 warm runs (docs/PLANS.md,
+# "Driver-sized MOR apply"): the driver apply used less CPU at every size, but
+# its wall time, 8.6 s against Spark's 9.5 s at 34 MB, fell behind between
+# there and 70 MB (17.7 s against 16.0 s), as its fold and writes run on one
+# core. Compaction won on both counts up to the 48 MB measured. At this bound
+# the ``toArrow()`` result is ~130 MB, ~3.9x its parquet bytes, well under
+# ``spark.driver.maxResultSize`` (1 GB by default), and the driver's Python
+# process peaks ~0.36 GB higher while it holds the events, the sort and the
+# winners. ``-1`` turns the driver path off.
+DRIVER_FOLD_BYTES = 32 * 1024 * 1024
+
+
+def fits_driver(nbytes: int) -> bool:
+    """Whether an input of ``nbytes`` (parquet bytes, or Catalyst's estimate
+    of them) is folded and written on the driver with pyarrow instead of by
+    a Spark plan: at most :data:`DRIVER_FOLD_BYTES`, the size up to which
+    the driver path measured ahead in both wall and CPU time."""
+    return 0 <= nbytes <= DRIVER_FOLD_BYTES
+
+
+def _write_bucket_files(
+    rows: pa.Table, commit_dir: str, max_rows: int
+) -> list[tuple[str, Any]]:
+    """Write ``rows``, sorted by ``_bucket`` and in physical column names,
+    as one snappy parquet file per bucket under ``_bucket=<k>/`` (rolled
+    every ``max_rows`` rows, as Spark's ``maxRecordsPerFile``). Returns
+    ``(path, footer metadata)`` pairs in path order; the footers come from
+    the writer, so no file is reopened to describe it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if rows.num_rows == 0:
+        return []
+    b = rows[BUCKET_COL].to_numpy()
+    bounds = [0, *(np.flatnonzero(np.diff(b)) + 1).tolist(), rows.num_rows]
+    data = rows.drop_columns([BUCKET_COL])
+    # Dictionary-encode a column only where values repeat (at most half as
+    # many distinct values as rows), as parquet-mr ends up doing by falling
+    # back to PLAIN when a dictionary does not pay: on all-unique columns
+    # (text, ts, lsn) a dictionary page plus indices is larger than PLAIN.
+    dict_cols = [
+        f.name
+        for f in data.schema
+        if not pa.types.is_nested(f.type)
+        and 2 * pc.count_distinct(data[f.name]).as_py() <= data.num_rows
+    ]
+    name = uuid.uuid4().hex
+    out = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        d = os.path.join(commit_dir, f"{BUCKET_COL}={int(b[lo])}")
+        os.makedirs(d)
+        for i, off in enumerate(range(lo, hi, max_rows)):
+            p = os.path.join(d, f"part-00000-{name}.c{i:03d}.snappy.parquet")
+            footers: list[Any] = []
+            pq.write_table(
+                data.slice(off, min(max_rows, hi - off)), p,
+                compression="snappy", store_schema=False,
+                use_dictionary=dict_cols, metadata_collector=footers,
+            )
+            out.append((p, footers[0]))
+    return sorted(out, key=lambda x: x[0])
 
 
 class CommitConflict(Exception):
@@ -938,7 +1009,7 @@ class LakeTable:
 
     def write_data_files(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         kind: str = "base",
         max_records_per_file: int | None = None,
         cluster_by: list[str] | None = None,
@@ -947,6 +1018,16 @@ class LakeTable:
         rows_unique_per_key: bool = False,
     ) -> list[dict[str, Any]]:
         """Write ``df`` (must carry ``_bucket``) into a fresh commit dir.
+
+        ``df`` may instead be a driver-side Arrow table that is already
+        LWW-folded and sorted by (bucket, key) — the output of
+        :func:`~etl_geo_dem_spark.operators.lww.lww_winners_arrow` on the
+        driver-sized MOR apply and ``compact_buckets`` paths. It is written
+        with pyarrow, one snappy file per bucket in the same
+        ``_bucket=<k>/`` layout, with no Spark job; ``cluster_by``,
+        ``pre_partitioned`` and ``rows_unique_per_key`` do not apply to it.
+        Its descriptors and stats are those the Spark writer records for the
+        same rows, taken from the footers pyarrow just wrote.
 
         ``pre_partitioned``: caller asserts ``df`` is ALREADY physically
         clustered by ``_bucket`` (the fused MOR apply in ``plans/merge.py``,
@@ -981,7 +1062,8 @@ class LakeTable:
         """
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
         snap = self.snapshot_meta()
-        logical_cols = list(df.columns)
+        arrow = not isinstance(df, DataFrame)
+        logical_cols = list(df.column_names if arrow else df.columns)
         mapping = (
             dict(snap["column_mapping"])
             if column_mapping is None
@@ -992,20 +1074,57 @@ class LakeTable:
             for c in mapping
             if c in logical_cols and mapping[c] != c
         }
-        if eff:
-            # alias to PHYSICAL names (zero-cost projection) — files must
-            # store birth names so renames stay metadata-only
-            df = df.select(*[F.col(c).alias(eff.get(c, c)) for c in logical_cols])
 
         def phys(c: str) -> str:
             return eff.get(c, c)
+
+        lead = cluster_by if cluster_by else []
+        stats_logical = list(
+            dict.fromkeys(
+                c
+                for c in (
+                    lead
+                    + snap["key_cols"]
+                    + snap["order_cols"]
+                )
+                if c in logical_cols
+            )
+        )
+        stats_cols = [phys(c) for c in stats_logical]
+        logical_of = {phys(c): c for c in stats_logical}
+
+        def describe(p: str, meta) -> dict[str, Any]:
+            stats = _file_column_stats(meta, stats_cols)
+            return {
+                "path": p,
+                "bucket": int(p.split(f"{BUCKET_COL}=")[1].split(os.sep)[0]),
+                "kind": kind,
+                "rows": meta.num_rows,
+                "bytes": os.path.getsize(p),
+                # stats keyed by LOGICAL name — what stats_filters/point_lookup
+                # compare against (files keep physical names internally)
+                "stats": {logical_of[k]: v for k, v in stats.items()},
+            }
+
+        if arrow:
+            # files store PHYSICAL (birth) names so renames stay metadata-only
+            written = _write_bucket_files(
+                df.rename_columns([phys(c) for c in logical_cols]),
+                commit_dir,
+                max_records_per_file or self.TARGET_FILE_ROWS,
+            )
+            return [describe(p, meta) for p, meta in written]
+
+        if eff:
+            # alias to PHYSICAL names (zero-cost projection) — files must
+            # store birth names so renames stay metadata-only
+            df = df.select(*[F.col(c).alias(phys(c)) for c in logical_cols])
 
         # cluster_by overrides the within-bucket sort (used by
         # compact(cluster_by=...)): files then roll in cluster-column order, so
         # their [min, max] ranges are disjoint in that column and the stats
         # prune range reads on it — the engine's Z-order-lite. The key columns
         # stay appended so point lookups keep tight row-group stats too.
-        lead = cluster_by if cluster_by else []
         sort_cols = (
             [BUCKET_COL]
             + [phys(c) for c in lead if c in logical_cols]
@@ -1052,34 +1171,6 @@ class LakeTable:
         )
         import pyarrow.parquet as pq
 
-        stats_logical = list(
-            dict.fromkeys(
-                c
-                for c in (
-                    lead
-                    + snap["key_cols"]
-                    + snap["order_cols"]
-                )
-                if c in logical_cols
-            )
-        )
-        stats_cols = [phys(c) for c in stats_logical]
-        logical_of = {phys(c): c for c in stats_logical}
-
-        def describe(p: str) -> dict[str, Any]:
-            meta = pq.ParquetFile(p).metadata
-            stats = _file_column_stats(meta, stats_cols)
-            return {
-                "path": p,
-                "bucket": int(p.split(f"{BUCKET_COL}=")[1].split(os.sep)[0]),
-                "kind": kind,
-                "rows": meta.num_rows,
-                "bytes": os.path.getsize(p),
-                # stats keyed by LOGICAL name — what stats_filters/point_lookup
-                # compare against (files keep physical names internally)
-                "stats": {logical_of[k]: v for k, v in stats.items()},
-            }
-
         # footer reads are independent I/O — thread them so the driver-side
         # commit cost stays sub-second even at thousands of buckets per commit
         # (map() preserves input order: descriptors stay path-sorted, so
@@ -1088,7 +1179,7 @@ class LakeTable:
 
         paths = sorted(glob.glob(os.path.join(commit_dir, f"{BUCKET_COL}=*", "*.parquet")))
         with ThreadPoolExecutor(max_workers=16) as pool:
-            return list(pool.map(describe, paths))
+            return list(pool.map(lambda p: describe(p, pq.ParquetFile(p).metadata), paths))
 
     def commit(
         self,
@@ -1491,17 +1582,36 @@ class LakeTable:
 
         A full rewrite replaces every file, so it physically purges dropped
         columns and re-bases physical = logical names; a bucket subset keeps
-        the snapshot's mapping and carries the other buckets' refs."""
+        the snapshot's mapping and carries the other buckets' refs.
+
+        A bucket subset with no ``row_filter``, ``cluster_by`` or
+        ``n_buckets`` change whose files total at most the driver bound
+        (:func:`fits_driver`) is folded and written with pyarrow
+        (:meth:`_fold_buckets_arrow`) and runs no Spark job; the summary's
+        ``apply_path`` records which path ran."""
 
         def attempt() -> int:
             snap = self.snapshot_meta()
-            df = self.read(version=snap["version"], buckets=buckets, include_deleted=True)
-            if row_filter is not None:
-                df = df.filter(row_filter)
-            n = int(snap["n_buckets"]) if n_buckets is None else n_buckets
             full = buckets is None
+            wanted = set(buckets or [])
+            stored = [f for f in self._files_of(snap) if f["bucket"] in wanted]
+            on_driver = (
+                not full
+                and row_filter is None
+                and not cluster_by
+                and n_buckets is None
+                and fits_driver(sum(f["bytes"] for f in stored))
+            )
+            if on_driver:
+                rows = self._fold_buckets_arrow(snap, stored)
+            else:
+                df = self.read(version=snap["version"], buckets=buckets, include_deleted=True)
+                if row_filter is not None:
+                    df = df.filter(row_filter)
+                n = int(snap["n_buckets"]) if n_buckets is None else n_buckets
+                rows = df.withColumn(BUCKET_COL, bucket_expr(snap["key_col"], n))
             files = self.write_data_files(
-                df.withColumn(BUCKET_COL, bucket_expr(snap["key_col"], n)),
+                rows,
                 cluster_by=cluster_by,
                 column_mapping={} if full else None,
             )
@@ -1511,6 +1621,7 @@ class LakeTable:
                 summary={
                     "operation": operation,
                     "epoch_id": int(snap["summary"]["epoch_id"]),
+                    "apply_path": "arrow" if on_driver else "spark",
                     **summary_fields(snap, files),
                 },
                 expected_parent=snap["version"],
@@ -1520,6 +1631,38 @@ class LakeTable:
             )
 
         return retrying_commit(attempt, retries)
+
+    def _fold_buckets_arrow(
+        self, snap: dict[str, Any], files: list[dict[str, Any]]
+    ) -> pa.Table:
+        """The state stored in ``files`` of ``snap``, tombstones included,
+        as one Arrow table in the logical schema plus ``_bucket``, sorted by
+        (bucket, key): what :meth:`read` with ``include_deleted=True``
+        returns for their buckets, computed on the driver. Each bucket's
+        files are read with :meth:`_read_arrow` and folded with
+        :func:`lww_winners_arrow`."""
+        import numpy as np
+        import pyarrow as pa
+
+        from etl_geo_dem_spark.operators.lww import lww_winners_arrow
+
+        schema = T.StructType.fromJson(snap["schema"])
+        paths: dict[int, list[str]] = {}
+        for f in files:
+            paths.setdefault(f["bucket"], []).append(f["path"])
+        parts = [self._read_arrow(snap, schema, []).append_column(
+            BUCKET_COL, pa.array([], pa.int32())
+        )]
+        for b in sorted(paths):
+            rows = lww_winners_arrow(
+                self._read_arrow(snap, schema, paths[b]),
+                snap["key_cols"],
+                snap["order_cols"],
+            )
+            parts.append(rows.append_column(
+                BUCKET_COL, pa.array(np.full(rows.num_rows, b, np.int32))
+            ))
+        return pa.concat_tables(parts)
 
     def expire_tombstones(self, below_lsn: int, retries: int = 2) -> int:
         """GC delete markers older than a safety horizon.
@@ -2171,6 +2314,28 @@ class LakeTable:
         )
         return sorted({r["b"] for r in rows})
 
+    def _read_arrow(
+        self,
+        snap: dict[str, Any],
+        schema: T.StructType,
+        paths: list[str],
+        filters: list[tuple[str, str, Any]] | None = None,
+    ) -> pa.Table:
+        """``paths`` of ``snap`` read with pyarrow into the logical
+        ``schema``: each file is read under its physical column names,
+        columns a file predates come back null, and narrow files are cast up
+        to the (widened) table type. ``filters`` (physical names) prune row
+        groups and rows."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        phys = to_arrow_schema(physical_schema(schema, snap["column_mapping"]))
+        if not paths:
+            return phys.empty_table().rename_columns(schema.names)
+        return pq.read_table(
+            paths, schema=phys, columns=phys.names, filters=filters
+        ).rename_columns(schema.names)
+
     def point_lookup(
         self, key_value: Any, version: int | str | None = None
     ) -> DataFrame:
@@ -2190,8 +2355,6 @@ class LakeTable:
         result is a local relation in the logical schema: collecting it
         runs no Spark job."""
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         from etl_geo_dem_spark.operators.lww import lww_winners_arrow
 
@@ -2205,20 +2368,11 @@ class LakeTable:
             {key: (key_value, key_value)},
             resolve=True,
         )
-        mapping = snap["column_mapping"]
-        phys = to_arrow_schema(physical_schema(schema, mapping))
-        if files:
-            stored = pq.read_table(
-                [f["path"] for f in files],
-                schema=phys,
-                columns=phys.names,
-                filters=[(mapping.get(key, key), "==", key_value)],
-            )
-        else:
-            stored = phys.empty_table()
-        rows = lww_winners_arrow(
-            stored.rename_columns(schema.names), snap["key_cols"], snap["order_cols"]
+        stored = self._read_arrow(
+            snap, schema, [f["path"] for f in files],
+            [(snap["column_mapping"].get(key, key), "==", key_value)],
         )
+        rows = lww_winners_arrow(stored, snap["key_cols"], snap["order_cols"])
         if "_deleted" in rows.column_names:
             rows = rows.filter(pc.equal(rows["_deleted"], False))
         return self.spark.createDataFrame(rows, schema)

@@ -18,7 +18,12 @@ buckets → read ONLY those buckets of current state → one more LWW reduce of
 snapshot commit carrying the epoch id. Untouched buckets' files carry over to
 the new snapshot unchanged. Merge-on-read is ONE Spark job per epoch: LWW
 reduce → delta-file append; the touched-bucket set falls out of the written
-files' metadata, so there is no pre-write derivation pass at all.
+files' metadata, so there is no pre-write derivation pass at all. A
+merge-on-read batch that fits the driver (``fits_driver``: Catalyst's size
+estimate at most ``lake_table.DRIVER_FOLD_BYTES``, e.g. one streaming
+trigger) keeps that one job but not its shuffle: the job is a ``toArrow()``
+of the projected, bucketed batch, and the fold and the per-bucket writes run
+with pyarrow on the driver (``_fold_on_driver``; docs/PLANS.md).
 
 Exactly-once: the epoch id commits atomically inside the snapshot; re-applying an
 epoch ≤ the committed watermark is a no-op (and even a forced re-apply converges
@@ -35,23 +40,27 @@ null-filled — analog of the reference's pre-union type harmonization
 from __future__ import annotations
 
 import time
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_geo_dem_spark.config import EngineConfig
-from etl_geo_dem_spark.operators.lww import lww_winners
+from etl_geo_dem_spark.operators.lww import lww_winners, lww_winners_arrow
 from etl_geo_dem_spark.plans.lake_table import (
     BUCKET_COL,
     CommitConflict,
     LakeTable,
     bucket_expr,
     carry_excluding,
+    fits_driver,
     protected_columns,
     retrying_commit,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 ENVELOPE_COLS = {"op", "epoch"}
 
@@ -160,8 +169,11 @@ def evolve_schema(
     return evolved, [f.name for f in new_fields], sorted(widened)
 
 
-def _to_state_shape(winners: DataFrame, evolved: T.StructType) -> DataFrame:
-    """Project batch LWW winners into internal state shape (tombstone flag set).
+def _to_state_shape(
+    winners: DataFrame, evolved: T.StructType, *extra: Column
+) -> DataFrame:
+    """Project batch LWW winners into internal state shape (tombstone flag set),
+    followed by the ``extra`` columns, which are evaluated on ``winners``.
 
     Columns cast to the EVOLVED type: after a widening evolution the batch may
     be the narrow side (old producer still emitting int32 into a widened-long
@@ -174,7 +186,52 @@ def _to_state_shape(winners: DataFrame, evolved: T.StructType) -> DataFrame:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return winners.select(*cols)
+    return winners.select(*cols, *extra)
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``, planned but not run. For a file
+    scan (a streaming micro-batch included) it is the input files' bytes; an
+    unknown size reads as ``Long.MaxValue``."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def _fold_on_driver(
+    batch: DataFrame,
+    evolved: T.StructType,
+    bucket_key: str,
+    n_buckets: int,
+    key_cols: list[str],
+    order_cols: list[str],
+    expectations: dict[str, Any] | None,
+) -> tuple[int, dict[str, int], pa.Table]:
+    """The driver-sized MOR apply's one Spark job: the batch in state shape,
+    with its storage bucket and one violation flag per expectation, brought
+    to the driver by a single ``toArrow()``. There the expectation counts are
+    summed and :func:`lww_winners_arrow` folds the rows by (bucket, key),
+    which is the order the bucket writer wants.
+
+    Returns (input events, violation counts by name, winners as a
+    bucket-sorted Arrow table in logical names plus ``_bucket``)."""
+    import pyarrow.compute as pc
+
+    flags = {
+        f"_viol_{i}": ~F.coalesce(F.expr(c) if isinstance(c, str) else c, F.lit(False))
+        for i, c in enumerate((expectations or {}).values())
+    }
+    events = (
+        _to_state_shape(batch, evolved, *[c.alias(n) for n, c in flags.items()])
+        .withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
+        .toArrow()
+    )
+    counts = {
+        name: int(pc.sum(events[flag]).as_py() or 0)
+        for name, flag in zip(expectations or {}, flags)
+    }
+    winners = lww_winners_arrow(
+        events.drop_columns(list(flags)), [BUCKET_COL, *key_cols], order_cols
+    )
+    return events.num_rows, counts, winners
 
 
 def apply_changes(
@@ -301,113 +358,138 @@ def _apply_changes_once(
     key_cols = snap["key_cols"]
     order_cols = snap["order_cols"]
 
-    obs_in = Observation(f"epoch_{epoch_id}_in")
-    exp_metrics = []
-    for name, cond in (expectations or {}).items():
-        c = F.expr(cond) if isinstance(cond, str) else cond
-        # NULL predicate result counts as a violation (unknown != acceptable)
-        exp_metrics.append(
-            F.sum(F.when(F.coalesce(c, F.lit(False)), 0).otherwise(1)).alias(
-                f"viol_{name}"
-            )
-        )
-    batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events"), *exp_metrics)
-
-    strategy = cfg.dedup_strategy
-    fused = strategy == "agg" and cfg.merge_mode == "mor"
-    if fused:
-        # fused-exchange MOR apply (round 6, guide §2.4 "two operations keyed
-        # the same way can share one exchange"): repartition ONCE by the
-        # storage bucket, then aggregate by (bucket, key). The exchange has no
-        # explicit count: spark.sql.shuffle.partitions sizes it, and each
-        # bucket still lands in exactly one task, so a commit writes at most
-        # one file per bucket; raise that setting for more write parallelism.
-        # Bucket is a pure function of the key, so bucket-partitioning
-        # already co-locates every key and Spark plans the aggregate WITHOUT
-        # its own exchange; the writer then takes the output
-        # pre_partitioned. One shuffle + one stage barrier per
-        # epoch instead of two of each (measured 3.6 s → 2.3 s per bench
-        # epoch warm). The skew trade, and the "window" escape for a batch
-        # dominated by one key, are documented on EngineConfig.dedup_strategy.
-        bucketed = batch.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-        winners = lww_winners(
-            bucketed.repartition(F.col(BUCKET_COL)),
-            [BUCKET_COL, *key_cols], order_cols, strategy="agg",
-        )
-    else:
-        winners = lww_winners(batch, key_cols, order_cols, strategy=strategy)
-    batch_state = _to_state_shape(winners, evolved).withColumn(
-        BUCKET_COL, bucket_expr(bucket_key, n_buckets)
-    )
-
-    obs_out = Observation(f"epoch_{epoch_id}_out")
+    # A merge-on-read batch that fits the driver (fits_driver, on Catalyst's
+    # size estimate: planned, not run) is folded and written with pyarrow in
+    # ONE Spark job, the toArrow. Larger batches, and every copy-on-write
+    # apply, take the Spark plans below.
+    on_driver = cfg.merge_mode == "mor" and fits_driver(_estimated_bytes(batch))
     t_dedup = 0.0
-    t_write0 = time.time()  # cow re-bases this after its dedup+prune phase
-    if cfg.merge_mode == "mor":
-        # merge-on-read: append the epoch's winners as DELTA files — O(batch)
-        # writes, no read of current state; the read path resolves LWW over
-        # base ∪ deltas (LakeTable.read). Compaction folds deltas back.
-        # ONE Spark job per epoch: the touched-bucket set falls out of the
-        # written files' metadata for free, so no pre-write distinct+collect
-        # (and no persist) — that extra job was a per-epoch driver-side
-        # constant that Amdahl-capped multi-executor scaling (measured in
-        # BENCH/BASELINE.md §4: the 4-JVM level pays it at ~4× the relative
-        # cost of the 1-JVM level).
-        out = batch_state.observe(obs_out, F.count(F.lit(1)).alias("rows"))
-        new_files = table.write_data_files(
-            out, kind="delta", max_records_per_file=cfg.target_file_rows,
-            column_mapping=new_mapping, pre_partitioned=fused,
-            rows_unique_per_key=True,  # LWW winners: one row per key
+    if on_driver:
+        t_write0 = time.time()
+        t_plan = t_write0 - t0
+        input_events, exp_counts, winners = _fold_on_driver(
+            batch, evolved, bucket_key, n_buckets, key_cols, order_cols,
+            expectations,
         )
-        # nothing rewritten: the parent's manifest refs carry over BY
-        # REFERENCE — commit metadata is O(this epoch's files), flat as the
-        # table grows (manifest-list tier, lake_table.py module docstring)
+        out_rows = winners.num_rows
+        new_files = table.write_data_files(
+            winners, kind="delta", max_records_per_file=cfg.target_file_rows,
+            column_mapping=new_mapping,
+        )
         carried_refs = list(snap["manifests"])
         touched = sorted({f["bucket"] for f in new_files})
+        t_write = time.time() - t_write0
     else:
-        # copy-on-write needs the touched set BEFORE writing (it decides which
-        # state buckets to read), so the deduped batch has two consumers —
-        # persist it once instead of recomputing the dedup chain twice.
-        # MEMORY_AND_DISK: spills gracefully when winners exceed memory.
-        batch_state = batch_state.persist()
-        t_dedup0 = time.time()
-        # touched-partition derivation (SURVEY.md §4 "partition pruning before
-        # execution") — bounded by n_buckets, safe to collect.
-        touched = sorted(
-            r[0] for r in batch_state.select(BUCKET_COL).distinct().collect()
+        obs_in = Observation(f"epoch_{epoch_id}_in")
+        exp_metrics = []
+        for name, cond in (expectations or {}).items():
+            c = F.expr(cond) if isinstance(cond, str) else cond
+            # NULL predicate result counts as a violation (unknown != acceptable)
+            exp_metrics.append(
+                F.sum(F.when(F.coalesce(c, F.lit(False)), 0).otherwise(1)).alias(
+                    f"viol_{name}"
+                )
+            )
+        batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events"), *exp_metrics)
+
+        strategy = cfg.dedup_strategy
+        fused = strategy == "agg" and cfg.merge_mode == "mor"
+        if fused:
+            # fused-exchange MOR apply (round 6, guide §2.4 "two operations keyed
+            # the same way can share one exchange"): repartition ONCE by the
+            # storage bucket, then aggregate by (bucket, key). The exchange has no
+            # explicit count: spark.sql.shuffle.partitions sizes it, and each
+            # bucket still lands in exactly one task, so a commit writes at most
+            # one file per bucket; raise that setting for more write parallelism.
+            # Bucket is a pure function of the key, so bucket-partitioning
+            # already co-locates every key and Spark plans the aggregate WITHOUT
+            # its own exchange; the writer then takes the output
+            # pre_partitioned. One shuffle + one stage barrier per
+            # epoch instead of two of each (measured 3.6 s → 2.3 s per bench
+            # epoch warm). The skew trade, and the "window" escape for a batch
+            # dominated by one key, are documented on EngineConfig.dedup_strategy.
+            bucketed = batch.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
+            winners = lww_winners(
+                bucketed.repartition(F.col(BUCKET_COL)),
+                [BUCKET_COL, *key_cols], order_cols, strategy="agg",
+            )
+        else:
+            winners = lww_winners(batch, key_cols, order_cols, strategy=strategy)
+        batch_state = _to_state_shape(winners, evolved).withColumn(
+            BUCKET_COL, bucket_expr(bucket_key, n_buckets)
         )
-        t_dedup = time.time() - t_dedup0
-        t_write0 = time.time()  # don't double-count the dedup phase as write
-        target = table.read(buckets=touched, include_deleted=True)
-        for c in new_cols:  # union-by-name null-fill for pre-evolution state
-            if c not in target.columns:
-                target = target.withColumn(c, F.lit(None).cast(dict(
-                    (f.name, f.dataType) for f in evolved.fields)[c]))
-        # cast-select: on a widening evolution the stored state is the narrow
-        # side; cast is a no-op for unchanged columns.
-        target = target.select(
-            [F.col(f.name).cast(f.dataType).alias(f.name) for f in evolved.fields]
-        ).withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-        merged = lww_winners(
-            target.unionByName(batch_state), key_cols, order_cols, strategy="agg"
-        )
-        merged = merged.observe(obs_out, F.count(F.lit(1)).alias("rows"))
-        new_files = table.write_data_files(
-            merged, kind="base", max_records_per_file=cfg.target_file_rows,
-            column_mapping=new_mapping,
-            rows_unique_per_key=True,  # LWW merge output: one row per key
-        )
-        # copy-on-write: the rewritten buckets leave the carried refs by
-        # metadata exclusion — no file descriptor is re-serialized
-        carried_refs = carry_excluding(snap["manifests"], touched)
-        batch_state.unpersist()
-    t_write = time.time() - t_write0
-    # F.sum over an EMPTY batch is NULL (and an optimized-away plan has no
-    # metrics at all) — both mean zero violations, not a crash in the gate.
-    exp_counts = {
-        name: int(_obs_value(obs_in, f"viol_{name}") or 0)
-        for name in (expectations or {})
-    }
+
+        obs_out = Observation(f"epoch_{epoch_id}_out")
+        t_write0 = time.time()  # cow re-bases this after its dedup+prune phase
+        t_plan = t_write0 - t0  # the plan is built; the first Spark job follows
+        if cfg.merge_mode == "mor":
+            # merge-on-read: append the epoch's winners as DELTA files — O(batch)
+            # writes, no read of current state; the read path resolves LWW over
+            # base ∪ deltas (LakeTable.read). Compaction folds deltas back.
+            # ONE Spark job per epoch: the touched-bucket set falls out of the
+            # written files' metadata for free, so no pre-write distinct+collect
+            # (and no persist) — that extra job was a per-epoch driver-side
+            # constant that Amdahl-capped multi-executor scaling (measured in
+            # BENCH/BASELINE.md §4: the 4-JVM level pays it at ~4× the relative
+            # cost of the 1-JVM level).
+            out = batch_state.observe(obs_out, F.count(F.lit(1)).alias("rows"))
+            new_files = table.write_data_files(
+                out, kind="delta", max_records_per_file=cfg.target_file_rows,
+                column_mapping=new_mapping, pre_partitioned=fused,
+                rows_unique_per_key=True,  # LWW winners: one row per key
+            )
+            # nothing rewritten: the parent's manifest refs carry over BY
+            # REFERENCE — commit metadata is O(this epoch's files), flat as the
+            # table grows (manifest-list tier, lake_table.py module docstring)
+            carried_refs = list(snap["manifests"])
+            touched = sorted({f["bucket"] for f in new_files})
+        else:
+            # copy-on-write needs the touched set BEFORE writing (it decides which
+            # state buckets to read), so the deduped batch has two consumers —
+            # persist it once instead of recomputing the dedup chain twice.
+            # MEMORY_AND_DISK: spills gracefully when winners exceed memory.
+            batch_state = batch_state.persist()
+            t_dedup0 = time.time()
+            t_plan = t_dedup0 - t0
+            # touched-partition derivation (SURVEY.md §4 "partition pruning before
+            # execution") — bounded by n_buckets, safe to collect.
+            touched = sorted(
+                r[0] for r in batch_state.select(BUCKET_COL).distinct().collect()
+            )
+            t_dedup = time.time() - t_dedup0
+            t_write0 = time.time()  # don't double-count the dedup phase as write
+            target = table.read(buckets=touched, include_deleted=True)
+            for c in new_cols:  # union-by-name null-fill for pre-evolution state
+                if c not in target.columns:
+                    target = target.withColumn(c, F.lit(None).cast(dict(
+                        (f.name, f.dataType) for f in evolved.fields)[c]))
+            # cast-select: on a widening evolution the stored state is the narrow
+            # side; cast is a no-op for unchanged columns.
+            target = target.select(
+                [F.col(f.name).cast(f.dataType).alias(f.name) for f in evolved.fields]
+            ).withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
+            merged = lww_winners(
+                target.unionByName(batch_state), key_cols, order_cols, strategy="agg"
+            )
+            merged = merged.observe(obs_out, F.count(F.lit(1)).alias("rows"))
+            new_files = table.write_data_files(
+                merged, kind="base", max_records_per_file=cfg.target_file_rows,
+                column_mapping=new_mapping,
+                rows_unique_per_key=True,  # LWW merge output: one row per key
+            )
+            # copy-on-write: the rewritten buckets leave the carried refs by
+            # metadata exclusion — no file descriptor is re-serialized
+            carried_refs = carry_excluding(snap["manifests"], touched)
+            batch_state.unpersist()
+        t_write = time.time() - t_write0
+        # F.sum over an EMPTY batch is NULL (and an optimized-away plan has no
+        # metrics at all) — both mean zero violations, not a crash in the gate.
+        exp_counts = {
+            name: int(_obs_value(obs_in, f"viol_{name}") or 0)
+            for name in (expectations or {})
+        }
+        input_events = _obs_value(obs_in, "events")
+        out_rows = _obs_value(obs_out, "rows")
     if fail_on_violation and any(v > 0 for v in exp_counts.values()):
         bad = {k: v for k, v in exp_counts.items() if v > 0}
         raise ExpectationViolation(
@@ -461,8 +543,8 @@ def _apply_changes_once(
         "stream_id": stream_id,
         "status": "committed",
         "snapshot_version": version,
-        "input_events": _obs_value(obs_in, "events"),
-        "state_rows_touched_buckets": _obs_value(obs_out, "rows"),
+        "input_events": input_events,
+        "state_rows_touched_buckets": out_rows,
         "touched_buckets": touched,
         "n_touched": len(touched),
         "schema_evolved": new_cols,
@@ -470,13 +552,17 @@ def _apply_changes_once(
         "expectations": exp_counts,
         "merge_mode": cfg.merge_mode,
         "compacted_buckets": compacted_buckets,
-        "dedup_strategy": strategy,
+        "dedup_strategy": cfg.dedup_strategy,
+        "apply_path": "arrow" if on_driver else "spark",
         "lineage": _bucket_lineage(new_files),
         "duration_sec": round(time.time() - t0, 3),
         "phase_sec": {
+            "plan": round(t_plan, 3),
             "dedup_and_prune": round(t_dedup, 3),
             "merge_write": round(t_write, 3),
-            "commit_and_manifest": round(time.time() - t0 - t_dedup - t_write, 3),
+            "commit_and_manifest": round(
+                time.time() - t0 - t_plan - t_dedup - t_write, 3
+            ),
         },
         "parallelism": table.spark.sparkContext.defaultParallelism,
     }

@@ -2,7 +2,9 @@
 a fixed multiple of ``n_buckets``: with more buckets than shuffle partitions an
 epoch still runs about one task per shuffle partition, while hash-partitioning
 by ``_bucket`` keeps every bucket in one task — one file per bucket per commit,
-for the apply, ``compact_buckets`` and ``rebucket`` alike."""
+for the apply, ``compact_buckets`` and ``rebucket`` alike. These are the
+Spark plans, so the test forces them (``spark_plans``): on its small batch
+the apply and the compaction would otherwise run on the driver."""
 
 from __future__ import annotations
 
@@ -36,7 +38,7 @@ def _files_per_bucket(table: LakeTable) -> Counter:
 
 
 @pytest.mark.parametrize("fused", [True, False])
-def test_mor_apply_tasks_follow_shuffle_partitions(spark, warehouse, fused):
+def test_mor_apply_tasks_follow_shuffle_partitions(spark, warehouse, fused, spark_plans):
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert N_BUCKETS > shuffle_parts  # else the bound below proves nothing
     table = LakeTable.create(

@@ -110,23 +110,32 @@ def test_resume_mid_replay_equals_single_shot(spark, warehouse):
     """1-epoch vs k-epoch vs kill+resume consistency — the engine analog of the
     reference's representation-consistency tests (VRT == COG == AWS,
     /root/reference/tests/test_module.py:299-343)."""
+    _check_resume_mid_replay(spark, warehouse, EngineConfig())
+
+
+def test_resume_mid_replay_equals_single_shot_mor(spark, warehouse, apply_path):
+    """The same consistency on merge-on-read, on each apply path."""
+    _check_resume_mid_replay(spark, warehouse, EngineConfig(merge_mode="mor"))
+
+
+def _check_resume_mid_replay(spark, warehouse, cfg):
     ch = _changes(spark, 2500)
     # path A: full replay in one process
     ta = _mk_table(spark, warehouse, name="a")
     for e, b in epoch_batches(ch, EVOLVE_FROM):
-        apply_changes(ta, b, e)
+        apply_changes(ta, b, e, cfg)
     # path B: apply 2 epochs, "crash", reopen from disk, resume
     tb = _mk_table(spark, warehouse, name="b")
     batches = list(epoch_batches(ch, EVOLVE_FROM))
     for e, b in batches[:2]:
-        apply_changes(tb, b, e)
+        apply_changes(tb, b, e, cfg)
     tb2 = LakeTable.load(spark, tb.path)  # fresh handle = restart
     assert tb2.last_epoch() == batches[1][0]
     for e, b in batches:  # replay from the START — committed epochs skip
-        apply_changes(tb2, b, e)
+        apply_changes(tb2, b, e, cfg)
     # path C: everything as ONE epoch
     tc = _mk_table(spark, warehouse, name="c")
-    apply_changes(tc, ch.withColumn("epoch", F.lit(0)), 0)
+    apply_changes(tc, ch.withColumn("epoch", F.lit(0)), 0, cfg)
 
     pa, pb, pc = _final_state_pd(ta), _final_state_pd(tb2), _final_state_pd(tc)
     assert pa.equals(pb)

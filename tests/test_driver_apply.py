@@ -1,0 +1,259 @@
+"""The driver-sized merge-on-read apply and bucket compaction.
+
+A MOR batch whose Catalyst size estimate is at most
+``lake_table.DRIVER_FOLD_BYTES`` (``fits_driver``) is brought to the
+driver by one ``toArrow()``, folded with ``lww_winners_arrow`` and written
+with pyarrow; ``compact_buckets`` over buckets whose files fit is folded the
+same way with no Spark job at all. These tests pin those job counts, and pin
+that what the table records and returns — one key-sorted file per touched
+bucket, its rows and stats, manifests, expectation counts, schema evolution,
+widening, renames, empty batches, a non-UTC session — is what the Spark
+plans (forced with ``forced_spark_plans``) produce for the same input.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import os
+import uuid
+
+import pyarrow.parquet as pq
+import pytest
+from conftest import forced_spark_plans
+from pyspark.sql import functions as F
+
+from etl_geo_dem_spark.config import EngineConfig
+from etl_geo_dem_spark.plans.lake_table import LakeTable
+from etl_geo_dem_spark.plans.merge import ExpectationViolation, apply_changes
+from etl_geo_dem_spark.schemas import STATE_SCHEMA
+from etl_geo_dem_spark.sources.changes import epoch_batches, generate_changes
+
+MOR = EngineConfig(merge_mode="mor", max_deltas_per_bucket=0)
+PATHS = ("arrow", "spark")
+# what an epoch manifest reports about the data, whichever path ran
+MANIFEST_FIELDS = (
+    "status", "input_events", "state_rows_touched_buckets", "touched_buckets",
+    "schema_evolved", "schema_widened", "expectations",
+)
+
+
+def _path(path: str):
+    """A context for running on ``path``: "spark" forces the Spark plans."""
+    return forced_spark_plans() if path == "spark" else contextlib.nullcontext()
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the number
+    of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"driver-apply-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "driver apply")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _twins(spark, warehouse, name, n_buckets=8) -> dict[str, LakeTable]:
+    return {
+        p: LakeTable.create(
+            spark, os.path.join(warehouse, f"{name}_{p}"), STATE_SCHEMA,
+            n_buckets=n_buckets,
+        )
+        for p in PATHS
+    }
+
+
+def _contents(files) -> dict[int, tuple]:
+    """Per bucket: the file's kind, row count, stats and rows as stored.
+    Asserts one file per bucket and rows sorted by key within it."""
+    out = {}
+    for f in files:
+        assert f["bucket"] not in out, "more than one file in a bucket"
+        rows = pq.read_table(f["path"]).to_pylist()
+        keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
+        assert keys == sorted(keys) and len(set(keys)) == len(keys)
+        out[f["bucket"]] = (f["kind"], f["rows"], f["stats"], rows)
+    return out
+
+
+def _on_both(spark, tables: dict[str, LakeTable], fn):
+    """``fn(table)`` on each twin, the Spark one with its plans forced.
+    Asserts both calls added the same files (per bucket: kind, rows, stats
+    and stored rows); returns ``{path: fn's result}``."""
+    results, added = {}, {}
+    for path, table in tables.items():
+        before = {f["path"] for f in table.snapshot()["files"]}
+        with _path(path):
+            results[path] = fn(table)
+        added[path] = _contents(
+            f for f in table.snapshot()["files"] if f["path"] not in before
+        )
+    assert added["arrow"] == added["spark"]
+    return results
+
+
+def _apply_on_both(spark, tables, batch, epoch, **kw):
+    """Apply one epoch to both twins; asserts each took its path and both
+    manifests report the same data."""
+    m = _on_both(spark, tables, lambda t: apply_changes(t, batch, epoch, MOR, **kw))
+    for path in PATHS:
+        assert m[path]["apply_path"] == path
+    assert {k: m["arrow"][k] for k in MANIFEST_FIELDS} == {
+        k: m["spark"][k] for k in MANIFEST_FIELDS
+    }
+    return m["arrow"]
+
+
+def _same_state(tables):
+    a, b = (
+        tables[p].read(include_deleted=True).orderBy("conv_id", "turn_idx").toPandas()
+        for p in PATHS
+    )
+    assert len(a) > 0 and a.equals(b)
+    assert tables["arrow"].schema() == tables["spark"].schema()
+
+
+def _compact_on_both(spark, tables):
+    buckets = sorted(tables["arrow"].delta_counts())
+    assert buckets
+    _on_both(spark, tables, lambda t: t.compact_buckets(buckets))
+    for path, table in tables.items():
+        assert table.snapshot()["summary"]["apply_path"] == path
+    _same_state(tables)
+
+
+def test_arrow_apply_runs_one_spark_job(spark, warehouse):
+    table = LakeTable.create(spark, os.path.join(warehouse, "t"), STATE_SCHEMA, n_buckets=8)
+    batch = generate_changes(spark, 3000, n_conv=60, n_epochs=1, dup_pct=10)
+    m, jobs = _jobs(spark, lambda: apply_changes(table, batch, 0, MOR))
+    assert m["apply_path"] == "arrow"
+    assert jobs == 1  # the toArrow; the fold, the writes and the commit run none
+    assert m["input_events"] == batch.count()
+    assert m["state_rows_touched_buckets"] == table.read(include_deleted=True).count()
+    assert set(m["phase_sec"]) == {"plan", "dedup_and_prune", "merge_write", "commit_and_manifest"}
+
+
+def test_arrow_files_dictionary_encode_repeating_columns_only(spark, warehouse):
+    """As parquet-mr ends up doing: a dictionary for a column whose values
+    repeat (``role``), PLAIN for an all-unique one (``text``, ``lsn``)."""
+    table = LakeTable.create(spark, os.path.join(warehouse, "t"), STATE_SCHEMA, n_buckets=4)
+    apply_changes(table, generate_changes(spark, 2000, n_conv=40, n_epochs=1), 0, MOR)
+    for f in table.snapshot()["files"]:
+        rg = pq.ParquetFile(f["path"]).metadata.row_group(0)
+        dictionary = {
+            rg.column(i).path_in_schema: rg.column(i).has_dictionary_page
+            for i in range(rg.num_columns)
+        }
+        assert dictionary["role"]
+        assert not dictionary["text"] and not dictionary["lsn"]
+
+
+def test_arrow_compact_buckets_runs_no_job(spark, warehouse):
+    table = LakeTable.create(spark, os.path.join(warehouse, "t"), STATE_SCHEMA, n_buckets=8)
+    ch = generate_changes(spark, 4000, n_conv=80, n_epochs=4, dup_pct=10)
+    for e, b in epoch_batches(ch):
+        apply_changes(table, b, e, MOR)
+    before = table.read(include_deleted=True).orderBy("conv_id", "turn_idx").toPandas()
+    buckets = sorted(table.delta_counts())
+    _, jobs = _jobs(spark, lambda: table.compact_buckets(buckets))
+    assert jobs == 0
+    snap = table.snapshot()
+    assert snap["summary"]["apply_path"] == "arrow"
+    assert {f["kind"] for f in snap["files"]} == {"base"}
+    assert sorted(f["bucket"] for f in snap["files"]) == buckets  # one file each
+    after = table.read(include_deleted=True).orderBy("conv_id", "turn_idx").toPandas()
+    assert after.equals(before)
+
+
+def test_arrow_files_match_spark_files(spark, warehouse):
+    """Epoch by epoch, with a schema evolution in epoch 1, and then the
+    compaction of every bucket: the same files per bucket on both paths."""
+    tables = _twins(spark, warehouse, "files")
+    ch = generate_changes(spark, 4000, n_conv=80, n_epochs=3, dup_pct=10, evolve_from_epoch=1)
+    for e, b in epoch_batches(ch, evolve_from_epoch=1):
+        m = _apply_on_both(spark, tables, b, e)
+        assert m["schema_evolved"] == (["tool_args"] if e == 1 else [])
+    _same_state(tables)
+    _compact_on_both(spark, tables)
+
+
+def test_arrow_expectations_match_spark(spark, warehouse):
+    """Counts equal the Spark path's, NULL predicate results count as
+    violations, and a fail_on_violation raise leaves no commit behind."""
+    tables = _twins(spark, warehouse, "exp")
+    ch = generate_changes(spark, 2000, n_conv=40, n_epochs=2)
+    batches = dict(epoch_batches(ch))
+    expectations = {
+        "ts_set": "ts IS NOT NULL",
+        "not_delete": F.col("op") != "D",
+        "tool_known": "tool = 'search'",  # NULL for most rows: a violation
+    }
+    m = _apply_on_both(spark, tables, batches[0], 0, expectations=expectations)
+    assert m["expectations"]["ts_set"] == 0
+    assert 0 < m["expectations"]["not_delete"] < m["input_events"]
+    assert m["expectations"]["tool_known"] > 0
+    for path, table in tables.items():
+        version = table.current_version()
+        with _path(path), pytest.raises(ExpectationViolation):
+            apply_changes(
+                table, batches[1], 1, MOR, expectations=expectations,
+                fail_on_violation=True,
+            )
+        assert table.current_version() == version
+        assert table.last_epoch() == 0
+
+
+def test_arrow_widening_and_rename_match_spark(spark, warehouse):
+    """A widened key column (int → long), a renamed column, a batch that
+    re-adds the old name (a fresh physical name), and the compaction that
+    reads narrow and wide files together."""
+    tables = _twins(spark, warehouse, "evolve")
+    ch = generate_changes(spark, 3000, n_conv=60, n_epochs=3, dup_pct=10)
+    batches = dict(epoch_batches(ch))
+    _apply_on_both(spark, tables, batches[0], 0)
+    wide = batches[1].withColumn("turn_idx", F.col("turn_idx").cast("long"))
+    assert _apply_on_both(spark, tables, wide, 1)["schema_widened"] == ["turn_idx"]
+    for table in tables.values():
+        table.rename_column("text", "body")
+    renamed = batches[2].withColumnRenamed("text", "body").withColumn(
+        "text", F.lit("again")
+    )
+    assert _apply_on_both(spark, tables, renamed, 2)["schema_evolved"] == ["text"]
+    mapping = tables["arrow"].snapshot_meta()["column_mapping"]
+    assert mapping["body"] == "text" and mapping["text"] != "text"
+    _same_state(tables)
+    _compact_on_both(spark, tables)
+
+
+def test_arrow_empty_batch_commits_like_spark(spark, warehouse):
+    tables = _twins(spark, warehouse, "empty")
+    ch = generate_changes(spark, 1000, n_conv=20, n_epochs=1)
+    _apply_on_both(spark, tables, ch, 0)
+    m = _apply_on_both(spark, tables, ch.filter(F.lit(False)), 1)
+    assert m["status"] == "committed" and m["input_events"] == 0
+    assert m["touched_buckets"] == []
+    assert all(t.last_epoch() == 1 for t in tables.values())
+    _same_state(tables)
+
+
+def test_arrow_apply_in_a_non_utc_session(spark, warehouse):
+    """Timestamps are instants on both paths: files, stats and reads agree
+    when the session time zone is not UTC."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        tables = _twins(spark, warehouse, "tz")
+        ch = generate_changes(spark, 2000, n_conv=40, n_epochs=2, dup_pct=10)
+        for e, b in epoch_batches(ch):
+            _apply_on_both(spark, tables, b, e)
+        _same_state(tables)
+        _compact_on_both(spark, tables)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    want = ch.groupBy().agg(F.min("ts"), F.max("ts")).first()
+    stats = [f["stats"]["ts"] for f in tables["arrow"].snapshot()["files"]]
+    lo, hi = min(s["min"] for s in stats), max(s["max"] for s in stats)
+    # the latest event is its key's winner, so the top stat is exact
+    assert lo >= int(want[0].timestamp() * 1e6) and hi == int(want[1].timestamp() * 1e6)

@@ -54,6 +54,14 @@ def test_mor_write_amplification_is_o_batch(spark, warehouse):
 
 
 def test_mor_compaction_folds_deltas(spark, warehouse):
+    _check_compaction_folds_deltas(spark, warehouse)
+
+
+def test_mor_compaction_folds_deltas_spark_plans(spark, warehouse, spark_plans):
+    _check_compaction_folds_deltas(spark, warehouse)
+
+
+def _check_compaction_folds_deltas(spark, warehouse):
     ch = generate_changes(spark, 3000, n_conv=60, n_epochs=5, evolve_from_epoch=3)
     table = _replay(spark, warehouse, "morc", MOR, ch)
     before = _state(table)
@@ -98,7 +106,18 @@ def test_mor_resume_and_delete_semantics(spark, warehouse):
 
 def test_mor_auto_compaction_bounds_delta_chains(spark, warehouse):
     """With max_deltas_per_bucket=3, a long replay keeps every bucket's delta
-    chain bounded and the state stays oracle-correct."""
+    chain bounded and the state stays oracle-correct. Batches and buckets
+    this small are applied and compacted on the driver."""
+    assert _check_auto_compaction(spark, warehouse) == {"arrow"}
+
+
+def test_mor_auto_compaction_bounds_delta_chains_spark_plans(spark, warehouse, spark_plans):
+    assert _check_auto_compaction(spark, warehouse) == {"spark"}
+
+
+def _check_auto_compaction(spark, warehouse) -> set[str]:
+    """Replay with auto-compaction; returns the apply paths the compactions
+    took."""
     cfg = EngineConfig(merge_mode="mor", max_deltas_per_bucket=3)
     ch = generate_changes(spark, 4000, n_conv=40, n_epochs=10, evolve_from_epoch=None)
     table = LakeTable.create(spark, os.path.join(warehouse, "morauto"), STATE_SCHEMA, n_buckets=4)
@@ -114,6 +133,11 @@ def test_mor_auto_compaction_bounds_delta_chains(spark, warehouse):
     assert got["text"].fillna("∅").tolist() == [
         r["text"] if r["text"] is not None else "∅" for r in exp
     ]
+    return {
+        h["summary"]["apply_path"]
+        for h in table.history()
+        if h["summary"].get("operation") == "compact_buckets"
+    }
 
 
 def test_mor_read_resolves_only_delta_buckets(spark, warehouse):

@@ -57,15 +57,32 @@ def _to_rows(raw):
     return rows
 
 
-@settings(
+PROPERTY = settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
+
+
+@PROPERTY
 @given(raw=events_strategy, merge_mode=st.sampled_from(["cow", "mor"]))
 def test_replay_equals_reference_fold_on_arbitrary_streams(
     spark, tmp_path_factory, raw, merge_mode
 ):
+    """MOR epochs this small take the driver (pyarrow) apply."""
+    _check_replay(spark, tmp_path_factory, raw, merge_mode)
+
+
+@PROPERTY
+@given(raw=events_strategy)
+def test_replay_equals_reference_fold_on_spark_plans(
+    spark, tmp_path_factory, spark_plans, raw
+):
+    """The same property with the Spark MOR apply and compaction forced."""
+    _check_replay(spark, tmp_path_factory, raw, "mor")
+
+
+def _check_replay(spark, tmp_path_factory, raw, merge_mode):
     rows = _to_rows(raw)
     wh = tmp_path_factory.mktemp("prop")
     table = LakeTable.create(

@@ -96,7 +96,9 @@ def test_table_changes_runs_no_listing_job(spark, wide_mor):
     assert rows and _listing(descs) == []
 
 
-def test_compact_buckets_runs_no_listing_job(spark, tmp_path):
+def test_compact_buckets_runs_no_listing_job(spark, tmp_path, spark_plans):
+    """The Spark rewrite, forced: 8 small buckets would otherwise be folded
+    on the driver with no job at all (tests/test_driver_apply.py)."""
     table = _wide_mor_table(spark, str(tmp_path / "t"))
     before = sorted(table.read_public().collect())
     _, descs = _jobs(spark, lambda: table.compact_buckets(list(range(8))))

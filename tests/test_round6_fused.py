@@ -1,7 +1,9 @@
 """Round-6 fused-exchange MOR apply (``dedup_strategy="agg"`` on MOR): the
 dedup aggregate and the writer's bucket clustering share ONE shuffle. Pins
 (a) final-state equivalence with the two-exchange ``window`` plan across
-restarts and schema evolution, and (b) the single-Exchange plan shape."""
+restarts and schema evolution, and (b) the single-Exchange plan shape. The
+applies here force the Spark plans (``spark_plans``): their small batches
+would otherwise take the driver path, where the strategy plays no part."""
 
 from __future__ import annotations
 
@@ -37,7 +39,7 @@ def _replay(spark, path, fused: bool):
     return table
 
 
-def test_fused_final_state_equals_split(spark, warehouse):
+def test_fused_final_state_equals_split(spark, warehouse, spark_plans):
     t_fused = _replay(spark, os.path.join(warehouse, "fused"), fused=True)
     t_split = _replay(spark, os.path.join(warehouse, "split"), fused=False)
     cols = sorted(t_fused.read_public().columns)
@@ -67,7 +69,7 @@ def test_fused_agg_is_single_exchange(spark):
 
 
 @pytest.mark.parametrize("fused", [True, False])
-def test_fused_epoch_skip_and_resume(spark, warehouse, fused):
+def test_fused_epoch_skip_and_resume(spark, warehouse, fused, spark_plans):
     """Exactly-once invariants are strategy-independent: re-applying a
     committed epoch is a skip, and a second process-level replay converges."""
     path = os.path.join(warehouse, f"resume_{fused}")
