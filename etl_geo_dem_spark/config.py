@@ -26,30 +26,29 @@ class EngineConfig:
     """
 
     # one of operators.lww.STRATEGIES: it picks among the Spark plans only.
-    # A merge-on-read batch that fits the driver (lake_table.fits_driver) is
-    # folded with pyarrow whatever this says. On MOR, "agg" is planned as ONE
-    # exchange by storage bucket, then an aggregate by (bucket, key) that
-    # Spark runs without a second exchange (plans/merge.py). The trade: no
-    # map-side combine before that shuffle, and skew granularity becomes the
-    # storage bucket. For a batch dominated by one key use "window": a
-    # two-exchange plan whose map-side WindowGroupLimit ships one row per key
-    # per map task. Measured at local[4] on a 4-core host, one MOR epoch of
-    # 4.2M events with one key carrying 80% of them, median of 3 warm runs:
-    # "agg" 5.24 s, "window" 3.12 s. Final state is identical either way
-    # (tests/test_round6_fused.py).
+    # A batch that fits the driver (lake_table.fits_driver) is folded with
+    # pyarrow whatever this says. "agg" is planned as ONE exchange by storage
+    # bucket, then an aggregate by (bucket, key) that Spark runs without a
+    # second exchange (plans/merge.py). The trade: no map-side combine before
+    # that shuffle, and skew granularity becomes the storage bucket. For a
+    # batch dominated by one key use "window": a two-exchange plan whose
+    # map-side WindowGroupLimit ships one row per key per map task. Measured
+    # at local[4] on a 4-core host, one MOR epoch of 4.2M events with one key
+    # carrying 80% of them, median of 3 warm runs: "agg" 5.24 s, "window"
+    # 3.12 s. Final state is identical either way (tests/test_round6_fused.py).
     dedup_strategy: str = "agg"
-    # merge_mode:
-    #   "cow" — copy-on-write: every epoch rewrites touched buckets; reads are
-    #           plain scans. Write amplification O(state per touched bucket).
-    #   "mor" — merge-on-read: every epoch appends per-bucket DELTA files
-    #           (O(batch) writes); reads resolve LWW over base ∪ deltas;
-    #           compaction folds deltas back into the base. The Iceberg
-    #           v2-style tradeoff, from scratch.
+    # merge_mode: both append the epoch's LWW winners as per-bucket DELTA
+    # files; they differ only in when the deltas fold into the base.
+    #   "cow" — copy-on-write: the touched buckets fold before the commit;
+    #           reads are plain scans. Write amplification O(state per
+    #           touched bucket).
+    #   "mor" — merge-on-read: the deltas commit as they are (O(batch)
+    #           writes); reads resolve LWW over base ∪ deltas; compaction
+    #           folds them later. The Iceberg v2-style tradeoff, from scratch.
     merge_mode: str = "cow"
-    # mor only: auto-fold a bucket's deltas back into its base once it
-    # accumulates this many delta files (bounds read amplification; 0 = never)
+    # auto-fold a bucket's deltas back into its base once it accumulates this
+    # many delta files (bounds read amplification; 0 = never)
     max_deltas_per_bucket: int = 16
-    target_file_rows: int = 5_000_000
 
     def __post_init__(self) -> None:
         if self.merge_mode not in MERGE_MODES:

@@ -34,11 +34,12 @@ All of them are pure pyspark.sql expressions — no Python in the hot path.
 ``lww_winners_arrow`` is the same fold over a driver-side Arrow table, for
 inputs too small to be worth a Spark job. It serves the point lookup
 (``LakeTable.point_lookup`` reads a few KB of pruned files and resolves them
-here), the streaming tail (a merge-on-read micro-batch that fits the driver
-is folded here by (bucket, key), its output already in the bucket writer's
-order; ``plans/merge.py``) and bucket compaction (``LakeTable.compact_buckets``
-folds each small bucket's base and deltas here). The Spark strategies above
-serve every larger input.
+here), the apply (a change batch that fits the driver, such as one
+streaming micro-batch, is folded here by (bucket, key), its output already
+in the bucket writer's order; ``plans/merge.py``) and the bucket folds of
+compaction and of the copy-on-write commit (``LakeTable._fold_files`` folds
+each small bucket's stored files here). The Spark strategies above serve
+every larger input.
 """
 
 from __future__ import annotations
@@ -76,9 +77,12 @@ def lww_winners_agg(
     candidate per key before any shuffle, which is what makes the reduce
     skew-safe (a hot key ships ≤1 row per map task regardless of its row
     count). Measured ~2.5× faster than ``max(struct(...))`` for the same
-    output. Ties on the full ``(ts, lsn)`` stamp are duplicate deliveries of
-    the same event (identical payload), so ``max_by``'s tie nondeterminism is
-    immaterial.
+    output. A tie on the full ``(ts, lsn)`` stamp is not always a duplicate
+    with an identical payload (an event re-applied after its column was
+    dropped and re-added carries the re-added value), and ``max_by`` keeps
+    whichever tied row it meets first. :func:`lww_winners_arrow` keeps the
+    first in input order, and the copy-on-write fold lists the epoch's files
+    first (``plans/merge.py:_fold_touched``): there the new delivery wins.
     """
     rest = [c for c in df.columns if c not in key_cols]
     winners = df.groupBy(*key_cols).agg(
@@ -99,8 +103,8 @@ def lww_winners_arrow(
     descending, then keep the first row of each key, whole.
 
     A null order value sorts last, i.e. lowest, as in ``max_by``'s struct
-    ordering. The winner is taken by row index rather than by a per-column
-    ``first`` aggregate, which skips nulls and would take a losing version's
+    ordering; the sort is stable, so of tied rows the first wins. The winner
+    is taken by row index rather than by a per-column ``first`` aggregate, which skips nulls and would take a losing version's
     non-null value where the winner's is null. Winners come out in key order.
     """
     import numpy as np

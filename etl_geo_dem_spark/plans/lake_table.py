@@ -210,9 +210,9 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
-# The largest input, in parquet bytes, that a merge-on-read apply or a bucket
-# compaction folds and writes on the driver with pyarrow instead of running a
-# Spark plan (``fits_driver``). Set from a size sweep of both paths at
+# The largest input, in parquet bytes, that an apply or a bucket fold folds
+# and writes on the driver with pyarrow instead of running a Spark plan
+# (``fits_driver``). Set from a size sweep of both paths at
 # local[4] on a 4-vCPU host, medians of 3 warm runs (docs/PLANS.md,
 # "Driver-sized MOR apply"): the driver apply used less CPU at every size, but
 # its wall time, 8.6 s against Spark's 9.5 s at 34 MB, fell behind between
@@ -857,7 +857,7 @@ class LakeTable:
         """Scan the snapshot's data files under their PHYSICAL column names
         and project back to the LOGICAL schema (a zero-cost alias node
         Catalyst folds into the scan). With an empty mapping this is exactly
-        the plain schema'd read.
+        the plain schema'd read; files that predate a column null-fill it.
 
         Planning runs no Spark job: the schema is given, and ``get_spark``
         keeps Spark's listing of the named files on the driver (one stat per
@@ -865,6 +865,8 @@ class LakeTable:
         ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default
         32) files are still listed by a Spark job with one task per file:
         the result is the same, only slower."""
+        if not paths:
+            return self.spark.createDataFrame([], schema)
         mapping = snap["column_mapping"]
         if not any(f.name in mapping for f in schema.fields):
             return self.spark.read.schema(schema).parquet(*paths)
@@ -946,42 +948,16 @@ class LakeTable:
         Merge-on-read resolution: when the snapshot contains DELTA files
         (merge_mode="mor" commits), the current row of a key is the LWW winner
         over base ∪ deltas — resolved here with the same skew-free reduce the
-        write path uses. ``resolve=False`` returns raw stored rows (inspection/
-        compaction internals).
+        write path uses (:meth:`_resolved`). ``resolve=False`` returns raw
+        stored rows (inspection internals).
         """
         snap = self.snapshot_meta(version)
         schema = T.StructType.fromJson(snap["schema"])
         files = self._pruned_files(snap, schema, buckets, stats_filters, resolve)
-        if not files:
-            df = self.spark.createDataFrame([], schema)
-        elif not (resolve and any(f["kind"] == "delta" for f in files)):
-            # explicit schema: files written before a schema evolution lack the new
-            # columns; the parquet reader null-fills by name (union-by-name read).
-            df = self._read_parquet(snap, schema, [f["path"] for f in files])
+        if resolve:
+            df = self._resolved(snap, schema, files)
         else:
-            # delta-aware resolution pruning: a bucket with only base files is
-            # already one-row-per-key (bases are written LWW-resolved; each
-            # commit writes ≤1 file per bucket and COW/compaction replace a
-            # bucket's files wholesale), so the LWW reduce — the only shuffle
-            # in this plan — runs over delta-bearing buckets alone. At scale,
-            # read cost follows the hot working set, not the table size.
-            from etl_geo_dem_spark.operators.lww import lww_winners_agg
-
-            delta_buckets = {
-                f["bucket"] for f in files if f["kind"] == "delta"
-            }
-            hot = [f for f in files if f["bucket"] in delta_buckets]
-            cold = [f for f in files if f["bucket"] not in delta_buckets]
-            resolved = lww_winners_agg(
-                self._read_parquet(snap, schema, [f["path"] for f in hot]),
-                snap["key_cols"],
-                snap["order_cols"],
-            )
-            if cold:
-                resolved = self._read_parquet(
-                    snap, schema, [f["path"] for f in cold]
-                ).unionByName(resolved)
-            df = resolved
+            df = self._read_parquet(snap, schema, [f["path"] for f in files])
         if stats_filters:
             # the row-level counterpart of the file skip: pruning bounds which
             # files open; this bounds which rows return (and pushes down to the
@@ -1000,33 +976,57 @@ class LakeTable:
         df = self.read(version=version)
         return df.drop("lsn", "_deleted")
 
+    def _resolved(
+        self,
+        snap: dict[str, Any],
+        schema: T.StructType,
+        files: list[dict[str, Any]],
+    ) -> DataFrame:
+        """``files`` of ``snap`` as a Spark plan of one LWW winner per key,
+        tombstones included. A base-only bucket is already one row per key,
+        so the LWW reduce (the only shuffle) covers delta-bearing buckets
+        alone: read cost follows the hot working set, not the table size."""
+        from etl_geo_dem_spark.operators.lww import lww_winners_agg
+
+        delta_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
+        hot = [f["path"] for f in files if f["bucket"] in delta_buckets]
+        cold = [f["path"] for f in files if f["bucket"] not in delta_buckets]
+        if not hot:
+            return self._read_parquet(snap, schema, cold)
+        resolved = lww_winners_agg(
+            self._read_parquet(snap, schema, hot),
+            snap["key_cols"],
+            snap["order_cols"],
+        )
+        if cold:
+            resolved = self._read_parquet(snap, schema, cold).unionByName(resolved)
+        return resolved
+
     # ----------------------------------------------------------------- write
-    # default per-file row cap, matching EngineConfig.target_file_rows — at
-    # ~100 B/row this keeps files in the hundreds-of-MB band parquet readers
-    # like; one hot bucket-epoch therefore splits instead of producing one
-    # multi-GB file that a single task must later scan.
+    # per-file row cap of every write: at ~100 B/row this keeps files in the
+    # hundreds-of-MB band parquet readers like; one hot bucket-epoch therefore
+    # splits instead of producing one multi-GB file that a single task must
+    # later scan.
     TARGET_FILE_ROWS = 5_000_000
 
     def write_data_files(
         self,
         df: DataFrame | pa.Table,
         kind: str = "base",
-        max_records_per_file: int | None = None,
         cluster_by: list[str] | None = None,
         column_mapping: dict[str, str] | None = None,
         pre_partitioned: bool = False,
-        rows_unique_per_key: bool = False,
     ) -> list[dict[str, Any]]:
-        """Write ``df`` (must carry ``_bucket``) into a fresh commit dir.
+        """Write ``df`` (must carry ``_bucket``, one row per key) into a fresh
+        commit dir, rolling a bucket's file every :attr:`TARGET_FILE_ROWS`.
 
         ``df`` may instead be a driver-side Arrow table that is already
         LWW-folded and sorted by (bucket, key) — the output of
         :func:`~etl_geo_dem_spark.operators.lww.lww_winners_arrow` on the
-        driver-sized MOR apply and ``compact_buckets`` paths. It is written
-        with pyarrow, one snappy file per bucket in the same
-        ``_bucket=<k>/`` layout, with no Spark job; ``cluster_by``,
-        ``pre_partitioned`` and ``rows_unique_per_key`` do not apply to it.
-        Its descriptors and stats are those the Spark writer records for the
+        driver-sized apply and bucket-fold paths. It is written with
+        pyarrow, one snappy file per bucket in the same ``_bucket=<k>/``
+        layout, with no Spark job; ``cluster_by`` and ``pre_partitioned`` do
+        not apply to it. Its descriptors and stats are those the Spark writer records for the
         same rows, taken from the footers pyarrow just wrote.
 
         ``pre_partitioned``: caller asserts ``df`` is ALREADY physically
@@ -1051,14 +1051,15 @@ class LakeTable:
         under PHYSICAL names and the recorded per-file stats are keyed back
         to LOGICAL names (what query-side ``stats_filters`` use).
 
-        Rows are sorted by (bucket, key, order) within each write task: the
+        Rows are sorted by (bucket, key) within each write task: the
         FileFormatWriter needs a sort on the partition column anyway when the
         input is only hash-clustered, so extending that sort to the key columns
         is nearly free — and it gives every data file tight per-row-group
-        min/max stats on the key. At 100 TB (many row groups per file) that
-        turns a point lookup from a full-bucket scan into a row-group-pruned
-        read; files also land byte-deterministic for a given content, which
-        makes dump/restore replicas diffable.
+        min/max stats on the key (total, as every caller writes one row per
+        key). At 100 TB (many row groups per file) that turns a point lookup
+        from a full-bucket scan into a row-group-pruned read; files also land
+        byte-deterministic for a given content, which makes dump/restore
+        replicas diffable.
         """
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
         snap = self.snapshot_meta()
@@ -1111,7 +1112,7 @@ class LakeTable:
             written = _write_bucket_files(
                 df.rename_columns([phys(c) for c in logical_cols]),
                 commit_dir,
-                max_records_per_file or self.TARGET_FILE_ROWS,
+                self.TARGET_FILE_ROWS,
             )
             return [describe(p, meta) for p, meta in written]
 
@@ -1134,21 +1135,6 @@ class LakeTable:
                 if c in logical_cols and c not in lead
             ]
         )
-        if not rows_unique_per_key:
-            # ``rows_unique_per_key`` (the MERGE path: LWW winners, exactly one
-            # row per key) drops the order-column suffix from the write sort:
-            # with unique keys the (bucket, key) sort is already TOTAL, so the
-            # layout and byte-determinism are unchanged, the per-FILE footer
-            # min/max stats the snapshot records are order-independent anyway,
-            # and each epoch saves ~8% of its write stage in narrower sort
-            # comparisons (measured r6). Callers whose rows may repeat per key
-            # keep the full suffix — there the order columns break ties
-            # deterministically.
-            sort_cols += [
-                phys(c)
-                for c in snap["order_cols"]
-                if c in logical_cols and c not in lead
-            ]
         # hash-repartition on bucket id with no explicit count:
         # spark.sql.shuffle.partitions sizes the exchange (AQE may coalesce
         # it), so the task count follows the host, not n_buckets. Each bucket
@@ -1162,10 +1148,7 @@ class LakeTable:
         (
             clustered.sortWithinPartitions(*sort_cols)
             .write.partitionBy(BUCKET_COL)
-            .option(
-                "maxRecordsPerFile",
-                str(max_records_per_file or self.TARGET_FILE_ROWS),
-            )
+            .option("maxRecordsPerFile", str(self.TARGET_FILE_ROWS))
             .mode("overwrite")
             .parquet(commit_dir)
         )
@@ -1585,31 +1568,23 @@ class LakeTable:
         the snapshot's mapping and carries the other buckets' refs.
 
         A bucket subset with no ``row_filter``, ``cluster_by`` or
-        ``n_buckets`` change whose files total at most the driver bound
-        (:func:`fits_driver`) is folded and written with pyarrow
-        (:meth:`_fold_buckets_arrow`) and runs no Spark job; the summary's
+        ``n_buckets`` change is folded by :meth:`_fold_files`, with pyarrow
+        and no Spark job when its files fit the driver bound; the summary's
         ``apply_path`` records which path ran."""
 
         def attempt() -> int:
             snap = self.snapshot_meta()
             full = buckets is None
             wanted = set(buckets or [])
-            stored = [f for f in self._files_of(snap) if f["bucket"] in wanted]
-            on_driver = (
-                not full
-                and row_filter is None
-                and not cluster_by
-                and n_buckets is None
-                and fits_driver(sum(f["bytes"] for f in stored))
-            )
-            if on_driver:
-                rows = self._fold_buckets_arrow(snap, stored)
-            else:
-                df = self.read(version=snap["version"], buckets=buckets, include_deleted=True)
-                if row_filter is not None:
-                    df = df.filter(row_filter)
-                n = int(snap["n_buckets"]) if n_buckets is None else n_buckets
-                rows = df.withColumn(BUCKET_COL, bucket_expr(snap["key_col"], n))
+            stored = [f for f in self._files_of(snap) if full or f["bucket"] in wanted]
+            plain = not (full or cluster_by) and row_filter is None and n_buckets is None
+            rows, on_driver = self._fold_files(snap, stored, driver=plain)
+            if row_filter is not None:
+                rows = rows.filter(row_filter)
+            if n_buckets is not None:
+                rows = rows.withColumn(
+                    BUCKET_COL, bucket_expr(snap["key_col"], n_buckets)
+                )
             files = self.write_data_files(
                 rows,
                 cluster_by=cluster_by,
@@ -1632,6 +1607,25 @@ class LakeTable:
 
         return retrying_commit(attempt, retries)
 
+    def _fold_files(
+        self,
+        snap: dict[str, Any],
+        files: list[dict[str, Any]],
+        driver: bool = True,
+    ) -> tuple[pa.Table | DataFrame, bool]:
+        """``files`` of ``snap`` (whole buckets) folded to one LWW winner per
+        key plus ``_bucket``, ready to rewrite as base files: the fold of
+        :meth:`_rewrite` and of the copy-on-write apply. Pyarrow
+        (:meth:`_fold_buckets_arrow`) when ``driver`` and :func:`fits_driver`
+        hold, else :meth:`_resolved`. Returns (rows, driver folded)."""
+        if driver and fits_driver(sum(f["bytes"] for f in files)):
+            return self._fold_buckets_arrow(snap, files), True
+        schema = T.StructType.fromJson(snap["schema"])
+        rows = self._resolved(snap, schema, files).withColumn(
+            BUCKET_COL, bucket_expr(snap["key_col"], int(snap["n_buckets"]))
+        )
+        return rows, False
+
     def _fold_buckets_arrow(
         self, snap: dict[str, Any], files: list[dict[str, Any]]
     ) -> pa.Table:
@@ -1639,8 +1633,9 @@ class LakeTable:
         as one Arrow table in the logical schema plus ``_bucket``, sorted by
         (bucket, key): what :meth:`read` with ``include_deleted=True``
         returns for their buckets, computed on the driver. Each bucket's
-        files are read with :meth:`_read_arrow` and folded with
-        :func:`lww_winners_arrow`."""
+        files are read with :meth:`_read_arrow`, in the order ``files``
+        lists them, and folded with :func:`lww_winners_arrow`, which keeps
+        the first-listed of rows tied on the whole order key."""
         import numpy as np
         import pyarrow as pa
 

@@ -12,18 +12,20 @@ Semantics (SURVEY.md §2.3 J5 — the reference's join-update
     (deletes on absent keys still write a tombstone, so a later out-of-order
      event older than the delete cannot resurrect the row)
 
-Physically (copy-on-write): per-key LWW reduce of the batch → derive touched
-buckets → read ONLY those buckets of current state → one more LWW reduce of
-(state ∪ batch-winners) → copy-on-write rewrite of touched buckets → atomic
-snapshot commit carrying the epoch id. Untouched buckets' files carry over to
-the new snapshot unchanged. Merge-on-read is ONE Spark job per epoch: LWW
-reduce → delta-file append; the touched-bucket set falls out of the written
-files' metadata, so there is no pre-write derivation pass at all. A
-merge-on-read batch that fits the driver (``fits_driver``: Catalyst's size
-estimate at most ``lake_table.DRIVER_FOLD_BYTES``, e.g. one streaming
-trigger) keeps that one job but not its shuffle: the job is a ``toArrow()``
-of the projected, bucketed batch, and the fold and the per-bucket writes run
-with pyarrow on the driver (``_fold_on_driver``; docs/PLANS.md).
+Physically, both merge modes run one apply: a per-key LWW reduce of the
+batch written as one DELTA file per touched bucket, ONE Spark job per epoch
+(the touched-bucket set falls out of the written files' metadata). A batch
+that fits the driver (``fits_driver``: Catalyst's size estimate at most
+``lake_table.DRIVER_FOLD_BYTES``, e.g. one streaming trigger) keeps that one
+job but not its shuffle: the job is a ``toArrow()`` of the projected,
+bucketed batch, and the fold and the per-bucket writes run with pyarrow on
+the driver (``_fold_on_driver``; docs/PLANS.md).
+
+The modes differ only in WHEN the deltas fold into the base (stream–table
+duality). Merge-on-read commits them; reads resolve LWW over base ∪ deltas
+and compaction folds them later. Copy-on-write folds the touched buckets
+before the commit (``_fold_touched``), with the same fold as compaction.
+Untouched buckets' files carry over unchanged either way.
 
 Exactly-once: the epoch id commits atomically inside the snapshot; re-applying an
 epoch ≤ the committed watermark is a no-op (and even a forced re-apply converges
@@ -39,6 +41,8 @@ null-filled — analog of the reference's pre-union type harmonization
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from typing import TYPE_CHECKING, Any
 
@@ -205,7 +209,7 @@ def _fold_on_driver(
     order_cols: list[str],
     expectations: dict[str, Any] | None,
 ) -> tuple[int, dict[str, int], pa.Table]:
-    """The driver-sized MOR apply's one Spark job: the batch in state shape,
+    """The driver-sized apply's one Spark job: the batch in state shape,
     with its storage bucket and one violation flag per expectation, brought
     to the driver by a single ``toArrow()``. There the expectation counts are
     summed and :func:`lww_winners_arrow` folds the rows by (bucket, key),
@@ -234,6 +238,29 @@ def _fold_on_driver(
     return events.num_rows, counts, winners
 
 
+def _fold_touched(
+    table: LakeTable,
+    snap: dict[str, Any],
+    evolved: T.StructType,
+    mapping: dict[str, str],
+    deltas: list[dict[str, Any]],
+) -> list[dict[str, Any]]:
+    """Copy-on-write's in-commit fold: the touched buckets' files in
+    ``snap`` plus the epoch's ``deltas`` (listed first, so a ``(ts, lsn)``
+    tie goes to the new delivery), folded into written base files under the
+    epoch's uncommitted schema and mapping; the deltas are then deleted."""
+    if not deltas:
+        return []
+    pending = {**snap, "schema": evolved.jsonValue(), "column_mapping": mapping}
+    touched = {f["bucket"] for f in deltas}
+    stored = [f for f in table._files_of(snap) if f["bucket"] in touched]
+    rows, _ = table._fold_files(pending, deltas + stored)
+    files = table.write_data_files(rows, kind="base", column_mapping=mapping)
+    for d in {os.path.dirname(os.path.dirname(f["path"])) for f in deltas}:
+        shutil.rmtree(d)
+    return files
+
+
 def apply_changes(
     table: LakeTable,
     batch: DataFrame,
@@ -247,14 +274,18 @@ def apply_changes(
 ) -> dict[str, Any]:
     """Apply one epoch of change events to the table. Returns the epoch manifest.
 
+    ``cfg.merge_mode`` only decides when the epoch's delta files fold into
+    the base: ``"cow"`` before the commit, ``"mor"`` later (module docstring).
+
     ``expectations`` are named data-quality predicates over the INPUT events
     (Delta-constraints analog): ``{"ts_set": "ts IS NOT NULL", "known_op":
     F.col("op").isin("I","U","D")}`` — string entries go through ``F.expr``.
     Violation counts ride the SAME pass as the merge (Observation metrics on
     the batch — no extra scan, no extra shuffle) and land in the epoch
     manifest under ``expectations``. With ``fail_on_violation`` the epoch
-    raises :class:`ExpectationViolation` AFTER the data files are written but
-    BEFORE the snapshot commit, so a bad batch leaves no committed state —
+    raises :class:`ExpectationViolation` AFTER the delta files are written but
+    BEFORE any copy-on-write fold and the snapshot commit, so a bad batch
+    leaves no committed state —
     only orphan files for vacuum. A NULL predicate result counts as a
     violation (unknown is not acceptable).
 
@@ -352,33 +383,26 @@ def _apply_changes_once(
         if p != c:
             new_mapping[c] = p
         current_physicals.add(p)
-    # merge keys/ordering come from the table's own metadata (persisted at
+    # merge keys/ordering come from the table's own metadata (recorded at
     # create() and carried forward by every commit; the snapshot parse fills
     # the engine defaults for pre-metadata snapshots).
     key_cols = snap["key_cols"]
     order_cols = snap["order_cols"]
 
-    # A merge-on-read batch that fits the driver (fits_driver, on Catalyst's
-    # size estimate: planned, not run) is folded and written with pyarrow in
-    # ONE Spark job, the toArrow. Larger batches, and every copy-on-write
-    # apply, take the Spark plans below.
-    on_driver = cfg.merge_mode == "mor" and fits_driver(_estimated_bytes(batch))
-    t_dedup = 0.0
+    # A batch that fits the driver (fits_driver, on Catalyst's size
+    # estimate: planned, not run) is folded and written with pyarrow in ONE
+    # Spark job, the toArrow. Larger batches take the Spark plan below. Either
+    # way the epoch's LWW winners land as one delta file per touched bucket.
+    on_driver = fits_driver(_estimated_bytes(batch))
     if on_driver:
         t_write0 = time.time()
-        t_plan = t_write0 - t0
         input_events, exp_counts, winners = _fold_on_driver(
             batch, evolved, bucket_key, n_buckets, key_cols, order_cols,
             expectations,
         )
-        out_rows = winners.num_rows
         new_files = table.write_data_files(
-            winners, kind="delta", max_records_per_file=cfg.target_file_rows,
-            column_mapping=new_mapping,
+            winners, kind="delta", column_mapping=new_mapping
         )
-        carried_refs = list(snap["manifests"])
-        touched = sorted({f["bucket"] for f in new_files})
-        t_write = time.time() - t_write0
     else:
         obs_in = Observation(f"epoch_{epoch_id}_in")
         exp_metrics = []
@@ -392,10 +416,9 @@ def _apply_changes_once(
             )
         batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events"), *exp_metrics)
 
-        strategy = cfg.dedup_strategy
-        fused = strategy == "agg" and cfg.merge_mode == "mor"
+        fused = cfg.dedup_strategy == "agg"
         if fused:
-            # fused-exchange MOR apply (round 6, guide §2.4 "two operations keyed
+            # fused-exchange apply (round 6, guide §2.4 "two operations keyed
             # the same way can share one exchange"): repartition ONCE by the
             # storage bucket, then aggregate by (bucket, key). The exchange has no
             # explicit count: spark.sql.shuffle.partitions sizes it, and each
@@ -414,74 +437,21 @@ def _apply_changes_once(
                 [BUCKET_COL, *key_cols], order_cols, strategy="agg",
             )
         else:
-            winners = lww_winners(batch, key_cols, order_cols, strategy=strategy)
+            winners = lww_winners(batch, key_cols, order_cols, strategy=cfg.dedup_strategy)
         batch_state = _to_state_shape(winners, evolved).withColumn(
             BUCKET_COL, bucket_expr(bucket_key, n_buckets)
         )
-
-        obs_out = Observation(f"epoch_{epoch_id}_out")
-        t_write0 = time.time()  # cow re-bases this after its dedup+prune phase
-        t_plan = t_write0 - t0  # the plan is built; the first Spark job follows
-        if cfg.merge_mode == "mor":
-            # merge-on-read: append the epoch's winners as DELTA files — O(batch)
-            # writes, no read of current state; the read path resolves LWW over
-            # base ∪ deltas (LakeTable.read). Compaction folds deltas back.
-            # ONE Spark job per epoch: the touched-bucket set falls out of the
-            # written files' metadata for free, so no pre-write distinct+collect
-            # (and no persist) — that extra job was a per-epoch driver-side
-            # constant that Amdahl-capped multi-executor scaling (measured in
-            # BENCH/BASELINE.md §4: the 4-JVM level pays it at ~4× the relative
-            # cost of the 1-JVM level).
-            out = batch_state.observe(obs_out, F.count(F.lit(1)).alias("rows"))
-            new_files = table.write_data_files(
-                out, kind="delta", max_records_per_file=cfg.target_file_rows,
-                column_mapping=new_mapping, pre_partitioned=fused,
-                rows_unique_per_key=True,  # LWW winners: one row per key
-            )
-            # nothing rewritten: the parent's manifest refs carry over BY
-            # REFERENCE — commit metadata is O(this epoch's files), flat as the
-            # table grows (manifest-list tier, lake_table.py module docstring)
-            carried_refs = list(snap["manifests"])
-            touched = sorted({f["bucket"] for f in new_files})
-        else:
-            # copy-on-write needs the touched set BEFORE writing (it decides which
-            # state buckets to read), so the deduped batch has two consumers —
-            # persist it once instead of recomputing the dedup chain twice.
-            # MEMORY_AND_DISK: spills gracefully when winners exceed memory.
-            batch_state = batch_state.persist()
-            t_dedup0 = time.time()
-            t_plan = t_dedup0 - t0
-            # touched-partition derivation (SURVEY.md §4 "partition pruning before
-            # execution") — bounded by n_buckets, safe to collect.
-            touched = sorted(
-                r[0] for r in batch_state.select(BUCKET_COL).distinct().collect()
-            )
-            t_dedup = time.time() - t_dedup0
-            t_write0 = time.time()  # don't double-count the dedup phase as write
-            target = table.read(buckets=touched, include_deleted=True)
-            for c in new_cols:  # union-by-name null-fill for pre-evolution state
-                if c not in target.columns:
-                    target = target.withColumn(c, F.lit(None).cast(dict(
-                        (f.name, f.dataType) for f in evolved.fields)[c]))
-            # cast-select: on a widening evolution the stored state is the narrow
-            # side; cast is a no-op for unchanged columns.
-            target = target.select(
-                [F.col(f.name).cast(f.dataType).alias(f.name) for f in evolved.fields]
-            ).withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-            merged = lww_winners(
-                target.unionByName(batch_state), key_cols, order_cols, strategy="agg"
-            )
-            merged = merged.observe(obs_out, F.count(F.lit(1)).alias("rows"))
-            new_files = table.write_data_files(
-                merged, kind="base", max_records_per_file=cfg.target_file_rows,
-                column_mapping=new_mapping,
-                rows_unique_per_key=True,  # LWW merge output: one row per key
-            )
-            # copy-on-write: the rewritten buckets leave the carried refs by
-            # metadata exclusion — no file descriptor is re-serialized
-            carried_refs = carry_excluding(snap["manifests"], touched)
-            batch_state.unpersist()
-        t_write = time.time() - t_write0
+        t_write0 = time.time()  # the plan is built; the first Spark job follows
+        # ONE Spark job: no read of current state, and the touched-bucket set
+        # falls out of the written files' metadata, so no pre-write
+        # distinct+collect — that extra job was a per-epoch driver-side
+        # constant that Amdahl-capped multi-executor scaling (measured in
+        # BENCH/BASELINE.md §4: the 4-JVM level pays it at ~4× the relative
+        # cost of the 1-JVM level).
+        new_files = table.write_data_files(
+            batch_state, kind="delta", column_mapping=new_mapping,
+            pre_partitioned=fused,
+        )
         # F.sum over an EMPTY batch is NULL (and an optimized-away plan has no
         # metrics at all) — both mean zero violations, not a crash in the gate.
         exp_counts = {
@@ -489,13 +459,25 @@ def _apply_changes_once(
             for name in (expectations or {})
         }
         input_events = _obs_value(obs_in, "events")
-        out_rows = _obs_value(obs_out, "rows")
+    t_plan = t_write0 - t0
+    touched = sorted({f["bucket"] for f in new_files})
     if fail_on_violation and any(v > 0 for v in exp_counts.values()):
         bad = {k: v for k, v in exp_counts.items() if v > 0}
         raise ExpectationViolation(
             f"epoch {epoch_id}: data-quality expectations violated {bad} — "
             "snapshot NOT committed (written files are orphans; vacuum reaps)"
         )
+    if cfg.merge_mode == "cow":
+        new_files = _fold_touched(table, snap, evolved, new_mapping, new_files)
+        # the rewritten buckets leave the carried refs by metadata exclusion
+        # — no file descriptor is re-serialized
+        carried_refs = carry_excluding(snap["manifests"], touched)
+    else:
+        # merge-on-read: the parent's manifest refs carry over BY REFERENCE —
+        # commit metadata is O(this epoch's files), flat as the table grows
+        # (manifest-list tier, lake_table.py module docstring)
+        carried_refs = list(snap["manifests"])
+    t_write = time.time() - t_write0
     version = table.commit(
         carry=carried_refs,
         new_files=new_files,
@@ -527,7 +509,7 @@ def _apply_changes_once(
     # (after its own internal retries) must NOT bubble up as a merge conflict —
     # the fold is maintenance and safely deferred to the next epoch.
     compacted_buckets: list[int] = []
-    if cfg.merge_mode == "mor" and cfg.max_deltas_per_bucket > 0:
+    if cfg.max_deltas_per_bucket > 0:
         over = [
             b for b, c in table.delta_counts().items() if c >= cfg.max_deltas_per_bucket
         ]
@@ -544,7 +526,7 @@ def _apply_changes_once(
         "status": "committed",
         "snapshot_version": version,
         "input_events": input_events,
-        "state_rows_touched_buckets": out_rows,
+        "state_rows_touched_buckets": sum(f["rows"] for f in new_files),
         "touched_buckets": touched,
         "n_touched": len(touched),
         "schema_evolved": new_cols,
@@ -558,11 +540,8 @@ def _apply_changes_once(
         "duration_sec": round(time.time() - t0, 3),
         "phase_sec": {
             "plan": round(t_plan, 3),
-            "dedup_and_prune": round(t_dedup, 3),
             "merge_write": round(t_write, 3),
-            "commit_and_manifest": round(
-                time.time() - t0 - t_plan - t_dedup - t_write, 3
-            ),
+            "commit_and_manifest": round(time.time() - t0 - t_plan - t_write, 3),
         },
         "parallelism": table.spark.sparkContext.defaultParallelism,
     }

@@ -364,7 +364,7 @@ def test_data_files_sorted_by_key_within_file(spark, warehouse):
         ), f["path"]
 
 
-def test_oversized_bucket_rolls_multiple_sorted_files(spark, warehouse):
+def test_oversized_bucket_rolls_multiple_sorted_files(spark, warehouse, monkeypatch):
     """A bucket whose commit exceeds the per-file row cap splits into several
     files (the 100 TB file-sizing knob); reads stay exact and every rolled
     file is still key-sorted."""
@@ -380,7 +380,8 @@ def test_oversized_bucket_rolls_multiple_sorted_files(spark, warehouse):
     state = _to_state_shape(lww_winners(ch), table.schema()).withColumn(
         BUCKET_COL, bucket_expr("conv_id", 4)
     )
-    files = table.write_data_files(state, kind="base", max_records_per_file=50)
+    monkeypatch.setattr(LakeTable, "TARGET_FILE_ROWS", 50)
+    files = table.write_data_files(state, kind="base")
     per_bucket = {}
     for f in files:
         per_bucket.setdefault(f["bucket"], []).append(f)

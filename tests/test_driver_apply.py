@@ -1,19 +1,23 @@
-"""The driver-sized merge-on-read apply and bucket compaction.
+"""The driver-sized apply, bucket compaction and copy-on-write fold.
 
-A MOR batch whose Catalyst size estimate is at most
+A batch whose Catalyst size estimate is at most
 ``lake_table.DRIVER_FOLD_BYTES`` (``fits_driver``) is brought to the
 driver by one ``toArrow()``, folded with ``lww_winners_arrow`` and written
 with pyarrow; ``compact_buckets`` over buckets whose files fit is folded the
-same way with no Spark job at all. These tests pin those job counts, and pin
-that what the table records and returns — one key-sorted file per touched
-bucket, its rows and stats, manifests, expectation counts, schema evolution,
-widening, renames, empty batches, a non-UTC session — is what the Spark
-plans (forced with ``forced_spark_plans``) produce for the same input.
+same way with no Spark job at all, and so is the copy-on-write commit's fold
+of the touched buckets. These tests pin those job counts, and pin that what
+the table records and returns — one key-sorted file per touched bucket, its
+rows and stats, manifests, expectation counts, schema evolution, widening,
+renames, empty batches, a non-UTC session — is what the Spark plans (forced
+with ``forced_spark_plans``) produce for the same input, and that a
+copy-on-write epoch writes what merge-on-read plus a compaction of the
+touched buckets writes.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import uuid
 
@@ -29,6 +33,7 @@ from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import epoch_batches, generate_changes
 
 MOR = EngineConfig(merge_mode="mor", max_deltas_per_bucket=0)
+COW = EngineConfig(merge_mode="cow")
 PATHS = ("arrow", "spark")
 # what an epoch manifest reports about the data, whichever path ran
 MANIFEST_FIELDS = (
@@ -132,7 +137,67 @@ def test_arrow_apply_runs_one_spark_job(spark, warehouse):
     assert jobs == 1  # the toArrow; the fold, the writes and the commit run none
     assert m["input_events"] == batch.count()
     assert m["state_rows_touched_buckets"] == table.read(include_deleted=True).count()
-    assert set(m["phase_sec"]) == {"plan", "dedup_and_prune", "merge_write", "commit_and_manifest"}
+    assert set(m["phase_sec"]) == {"plan", "merge_write", "commit_and_manifest"}
+
+
+def test_cow_apply_runs_one_spark_job(spark, warehouse):
+    """Copy-on-write is the driver apply plus the fold of the touched
+    buckets before the commit: one Spark job (the toArrow), one new
+    snapshot holding base files only, one per touched bucket, and no file
+    under data/ that no snapshot references (the deltas are gone)."""
+    table = LakeTable.create(spark, os.path.join(warehouse, "t"), STATE_SCHEMA, n_buckets=8)
+    ch = generate_changes(spark, 3000, n_conv=60, n_epochs=2, dup_pct=10)
+    batches = dict(epoch_batches(ch))
+    apply_changes(table, batches[0], 0, COW)
+    version = table.current_version()
+    before = {f["path"] for f in table.snapshot()["files"]}
+    m, jobs = _jobs(spark, lambda: apply_changes(table, batches[1], 1, COW))
+    assert jobs == 1
+    assert m["apply_path"] == "arrow"
+    assert table.current_version() == version + 1
+    files = table.snapshot()["files"]
+    assert {f["kind"] for f in files} == {"base"}
+    added = sorted(f["bucket"] for f in files if f["path"] not in before)
+    assert added == m["touched_buckets"] and m["touched_buckets"]
+    assert m["state_rows_touched_buckets"] == table.read(
+        buckets=m["touched_buckets"], include_deleted=True
+    ).count()
+    referenced = {
+        os.path.realpath(f["path"])
+        for v in range(1, table.current_version() + 1)
+        for f in table.snapshot(v)["files"]
+    }
+    on_disk = {
+        os.path.realpath(p)
+        for p in glob.glob(os.path.join(table.path, "data", "**"), recursive=True)
+        if os.path.isfile(p)
+    }
+    assert on_disk and on_disk <= referenced
+
+
+def test_cow_apply_equals_mor_then_compact(spark, warehouse, apply_path):
+    """Epoch by epoch, through a schema evolution: a copy-on-write epoch
+    commits the same files per bucket (rows, stats, stored rows) as a
+    merge-on-read epoch followed by ``compact_buckets`` over its touched
+    buckets on a twin, on either path."""
+    cow, mor = (
+        LakeTable.create(
+            spark, os.path.join(warehouse, name), STATE_SCHEMA, n_buckets=8
+        )
+        for name in ("cow", "mor")
+    )
+    ch = generate_changes(spark, 4000, n_conv=80, n_epochs=3, dup_pct=10, evolve_from_epoch=1)
+    for e, b in epoch_batches(ch, evolve_from_epoch=1):
+        version = cow.current_version()
+        mc = apply_changes(cow, b, e, COW)
+        mm = apply_changes(mor, b, e, MOR)
+        mor.compact_buckets(mm["touched_buckets"])
+        assert mc["apply_path"] == mm["apply_path"] == apply_path
+        assert cow.current_version() == version + 1
+        fields = [k for k in MANIFEST_FIELDS if k != "state_rows_touched_buckets"]
+        assert {k: mc[k] for k in fields} == {k: mm[k] for k in fields}
+        assert _contents(cow.snapshot()["files"]) == _contents(mor.snapshot()["files"])
+    assert cow.schema() == mor.schema()
 
 
 def test_arrow_files_dictionary_encode_repeating_columns_only(spark, warehouse):

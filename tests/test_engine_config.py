@@ -26,6 +26,7 @@ def test_unknown_mode_or_strategy_is_a_value_error(kwargs):
         "salt_buckets",
         "hot_key_threshold",
         "hot_key_sample",
+        "target_file_rows",
     ],
 )
 def test_removed_field_is_a_type_error(field):

@@ -74,12 +74,12 @@ def test_replay_equals_reference_fold_on_arbitrary_streams(
 
 
 @PROPERTY
-@given(raw=events_strategy)
+@given(raw=events_strategy, merge_mode=st.sampled_from(["cow", "mor"]))
 def test_replay_equals_reference_fold_on_spark_plans(
-    spark, tmp_path_factory, spark_plans, raw
+    spark, tmp_path_factory, spark_plans, raw, merge_mode
 ):
-    """The same property with the Spark MOR apply and compaction forced."""
-    _check_replay(spark, tmp_path_factory, raw, "mor")
+    """The same property with the Spark apply and bucket folds forced."""
+    _check_replay(spark, tmp_path_factory, raw, merge_mode)
 
 
 def _check_replay(spark, tmp_path_factory, raw, merge_mode):

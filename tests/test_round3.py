@@ -147,13 +147,14 @@ def test_bucket_lineage_aggregates_rolled_files():
     assert lin["1"]["rows"] == 7 and lin["1"]["files"] == 1
 
 
-def test_epoch_lineage_exact_when_bucket_rolls_files(spark, warehouse):
+def test_epoch_lineage_exact_when_bucket_rolls_files(spark, warehouse, monkeypatch):
     """End-to-end: a hot bucket that rolls multiple files in one epoch reports
     the SUM of its rows in the manifest lineage (previously the last file
     silently overwrote the others)."""
     table = _mk_table(spark, warehouse, n_buckets=2)
     ch = generate_changes(spark, 2000, n_conv=30, n_epochs=1)
-    m = apply_changes(table, ch, 0, cfg=EngineConfig(target_file_rows=50))
+    monkeypatch.setattr(LakeTable, "TARGET_FILE_ROWS", 50)
+    m = apply_changes(table, ch, 0)
     total_lineage_rows = sum(v["rows"] for v in m["lineage"].values())
     assert total_lineage_rows == m["state_rows_touched_buckets"]
     assert any(v["files"] > 1 for v in m["lineage"].values())  # a bucket rolled

@@ -49,13 +49,14 @@ def test_file_stats_recorded_in_snapshot(spark, warehouse):
         assert isinstance(st["ts"]["min"], int)  # epoch micros, not INT96
 
 
-def test_point_lookup_prunes_to_subset_of_bucket_files(spark, warehouse):
+def test_point_lookup_prunes_to_subset_of_bucket_files(spark, warehouse, monkeypatch):
     # one bucket, tiny per-file row cap -> the writer rolls many key-sorted,
     # key-disjoint files; stats pruning must open only the file(s) covering
     # the looked-up key.
     table = _mk_table(spark, warehouse, n_buckets=1)
     ch = generate_changes(spark, 1500, n_conv=50, n_epochs=1)
-    apply_changes(table, ch, 0, EngineConfig(target_file_rows=100))
+    monkeypatch.setattr(LakeTable, "TARGET_FILE_ROWS", 100)
+    apply_changes(table, ch, 0)
     files = table.snapshot()["files"]
     assert len(files) > 3, "row cap should have rolled several files"
 
@@ -282,7 +283,7 @@ def test_widening_rejects_lossy_promotion(spark):
 # --------------------------------------------------- clustered compaction
 
 
-def test_compact_cluster_by_ts_makes_range_pruning_effective(spark, warehouse):
+def test_compact_cluster_by_ts_makes_range_pruning_effective(spark, warehouse, monkeypatch):
     table = _mk_table(spark, warehouse, n_buckets=1)
     ch = generate_changes(spark, 3000, n_conv=80, n_epochs=2)
     replay(table, ch)
@@ -296,9 +297,9 @@ def test_compact_cluster_by_ts_makes_range_pruning_effective(spark, warehouse):
     df = table.read(include_deleted=True)
     from etl_geo_dem_spark.plans.lake_table import BUCKET_COL, bucket_expr
 
+    monkeypatch.setattr(LakeTable, "TARGET_FILE_ROWS", 200)
     files = table.write_data_files(
         df.withColumn(BUCKET_COL, bucket_expr(table.key_col(), 1)),
-        max_records_per_file=200,
         cluster_by=["ts"],
     )
     table.commit(files, summary={"operation": "compact", "epoch_id": table.last_epoch(),

@@ -28,13 +28,13 @@ def _write_change_files(spark, out_dir, n=1200, n_epochs=3):
     return ch
 
 
-@pytest.mark.parametrize("merge_mode", ["cow", "mor", "mor-spark"])
+@pytest.mark.parametrize("merge_mode", ["cow", "mor", "cow-spark", "mor-spark"])
 def test_stream_ingest_matches_batch_replay(spark, warehouse, tmp_path, merge_mode, request):
-    # "mor" micro-batches fit the driver (pyarrow apply); "mor-spark" forces
+    # micro-batches fit the driver (pyarrow apply and fold); "-spark" forces
     # the Spark plans on the same stream
-    if merge_mode == "mor-spark":
+    if merge_mode.endswith("-spark"):
         request.getfixturevalue("spark_plans")
-        merge_mode = "mor"
+        merge_mode = merge_mode.removesuffix("-spark")
     src = str(tmp_path / "incoming")
     ckpt = str(tmp_path / "ckpt")
     ch = _write_change_files(spark, src)
