@@ -37,23 +37,31 @@ class EngineConfig:
     # carrying 80% of them, median of 3 warm runs: "agg" 5.24 s, "window"
     # 3.12 s. Final state is identical either way (tests/test_round6_fused.py).
     dedup_strategy: str = "agg"
-    # merge_mode: both append the epoch's LWW winners as per-bucket DELTA
-    # files; they differ only in when the deltas fold into the base.
-    #   "cow" — copy-on-write: the touched buckets fold before the commit;
-    #           reads are plain scans. Write amplification O(state per
-    #           touched bucket).
-    #   "mor" — merge-on-read: the deltas commit as they are (O(batch)
-    #           writes); reads resolve LWW over base ∪ deltas; compaction
-    #           folds them later. The Iceberg v2-style tradeoff, from scratch.
+    # One fold rule (plans/merge.py): the epoch writes its LWW winners as
+    # per-bucket DELTA files, and inside the same commit every touched bucket
+    # whose delta-file count, this epoch's included, reaches a threshold folds
+    # into its base. merge_mode names the threshold:
+    #   "cow" — copy-on-write: threshold 1, every touched bucket folds; reads
+    #           are plain scans. Write amplification O(state per touched
+    #           bucket).
+    #   "mor" — merge-on-read: threshold max_deltas_per_bucket; until then
+    #           commits write O(batch) and reads resolve LWW over base ∪
+    #           deltas. The Iceberg v2-style tradeoff, from scratch.
     merge_mode: str = "cow"
-    # auto-fold a bucket's deltas back into its base once it accumulates this
-    # many delta files (bounds read amplification; 0 = never)
+    # the "mor" threshold, which bounds read amplification; 0 = never fold
+    # (then only compact(), compact_buckets() or run_maintenance.py do). A
+    # bucket over it that no epoch touches folds only that way too.
     max_deltas_per_bucket: int = 16
 
     def __post_init__(self) -> None:
         if self.merge_mode not in MERGE_MODES:
             raise ValueError(
                 f"unknown merge_mode {self.merge_mode!r}; expected one of {MERGE_MODES}"
+            )
+        if self.max_deltas_per_bucket < 0:
+            raise ValueError(
+                f"max_deltas_per_bucket must be >= 0 (0 = never fold), "
+                f"got {self.max_deltas_per_bucket}"
             )
         if self.dedup_strategy not in STRATEGIES:
             raise ValueError(

@@ -471,6 +471,19 @@ def carry_excluding(
     return out
 
 
+def delta_counts_of(manifests: list[dict[str, Any]]) -> dict[int, int]:
+    """Number of delta files per bucket under a snapshot's manifest refs,
+    from the refs alone (each carries its per-bucket delta counts, minus its
+    excluded buckets): O(refs × buckets) metadata, no file list read."""
+    out: dict[int, int] = {}
+    for ref in manifests:
+        excl = set(ref.get("exclude_buckets") or [])
+        for b, n in ref.get("delta_buckets", {}).items():
+            if int(b) not in excl:
+                out[int(b)] = out.get(int(b), 0) + n
+    return out
+
+
 class LakeTable:
     # ref-list length at which commit() coalesces all sidecars into one
     # (manifest compaction — amortized O(files) every ~MAX_MANIFESTS commits)
@@ -2103,17 +2116,9 @@ class LakeTable:
         return out[:max_buckets] if max_buckets is not None else out
 
     def delta_counts(self) -> dict[int, int]:
-        """Number of delta files per bucket in the current snapshot — from the
-        manifest REFS alone (each ref carries its per-bucket delta counts), so
-        the per-epoch MOR auto-compaction check costs O(refs × touched
-        buckets) metadata, not O(total files)."""
-        out: dict[int, int] = {}
-        for ref in self.snapshot_meta()["manifests"]:
-            excl = set(ref.get("exclude_buckets") or [])
-            for b, n in ref.get("delta_buckets", {}).items():
-                if int(b) not in excl:
-                    out[int(b)] = out.get(int(b), 0) + n
-        return out
+        """Number of delta files per bucket in the current snapshot
+        (:func:`delta_counts_of` its manifest refs)."""
+        return delta_counts_of(self.snapshot_meta()["manifests"])
 
     def compact_buckets(self, buckets: list[int], retries: int = 2) -> int:
         """Fold base∪deltas into one base file for ONLY the given buckets —

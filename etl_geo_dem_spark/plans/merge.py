@@ -21,11 +21,15 @@ job but not its shuffle: the job is a ``toArrow()`` of the projected,
 bucketed batch, and the fold and the per-bucket writes run with pyarrow on
 the driver (``_fold_on_driver``; docs/PLANS.md).
 
-The modes differ only in WHEN the deltas fold into the base (stream–table
-duality). Merge-on-read commits them; reads resolve LWW over base ∪ deltas
-and compaction folds them later. Copy-on-write folds the touched buckets
-before the commit (``_fold_touched``), with the same fold as compaction.
-Untouched buckets' files carry over unchanged either way.
+When the deltas fold into the base (stream–table duality) is one rule,
+``_fold_touched``: inside the epoch's own commit, every touched bucket whose
+delta-file count, this epoch's included, reaches a threshold folds, with the
+same fold as compaction. The merge mode names the threshold: copy-on-write
+is 1 (every touched bucket folds, reads are plain scans); merge-on-read is
+``max_deltas_per_bucket`` (0 = never), and reads resolve LWW over base ∪
+deltas until then. Every epoch is one snapshot. A bucket that no epoch
+touches keeps its deltas until ``compact()`` or ``compact_buckets()``.
+Untouched buckets' files carry over unchanged.
 
 Exactly-once: the epoch id commits atomically inside the snapshot; re-applying an
 epoch ≤ the committed watermark is a no-op (and even a forced re-apply converges
@@ -58,6 +62,7 @@ from etl_geo_dem_spark.plans.lake_table import (
     LakeTable,
     bucket_expr,
     carry_excluding,
+    delta_counts_of,
     fits_driver,
     protected_columns,
     retrying_commit,
@@ -244,21 +249,33 @@ def _fold_touched(
     evolved: T.StructType,
     mapping: dict[str, str],
     deltas: list[dict[str, Any]],
-) -> list[dict[str, Any]]:
-    """Copy-on-write's in-commit fold: the touched buckets' files in
-    ``snap`` plus the epoch's ``deltas`` (listed first, so a ``(ts, lsn)``
-    tie goes to the new delivery), folded into written base files under the
-    epoch's uncommitted schema and mapping; the deltas are then deleted."""
-    if not deltas:
-        return []
+    threshold: int,
+) -> tuple[list[dict[str, Any]], list[int], str | None]:
+    """The fold rule, inside the epoch's commit: each bucket the epoch's
+    ``deltas`` touch whose delta-file count (stored in ``snap`` plus this
+    epoch's) reaches ``threshold`` (0 = never) folds its new deltas (listed
+    first, so a ``(ts, lsn)`` tie goes to the new delivery) and its files in
+    ``snap`` into base files under the epoch's uncommitted schema and
+    mapping. Returns (files to commit: the base files plus the unfolded
+    buckets' deltas, folded buckets, ``"arrow"``/``"spark"`` or None)."""
+    counts = delta_counts_of(snap["manifests"])
+    for f in deltas:
+        counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
+    over = {f["bucket"] for f in deltas if 0 < threshold <= counts[f["bucket"]]}
+    if not over:
+        return deltas, [], None
+    folding = [f for f in deltas if f["bucket"] in over]
+    kept = [f for f in deltas if f["bucket"] not in over]
     pending = {**snap, "schema": evolved.jsonValue(), "column_mapping": mapping}
-    touched = {f["bucket"] for f in deltas}
-    stored = [f for f in table._files_of(snap) if f["bucket"] in touched]
-    rows, _ = table._fold_files(pending, deltas + stored)
+    stored = [f for f in table._files_of(snap) if f["bucket"] in over]
+    rows, on_driver = table._fold_files(pending, folding + stored)
     files = table.write_data_files(rows, kind="base", column_mapping=mapping)
-    for d in {os.path.dirname(os.path.dirname(f["path"])) for f in deltas}:
+    # the folded deltas were never committed: drop their bucket dirs, or the
+    # whole commit dir when none of its files is kept
+    commit_dir = os.path.dirname(os.path.dirname(deltas[0]["path"]))
+    for d in {os.path.dirname(f["path"]) for f in folding} if kept else [commit_dir]:
         shutil.rmtree(d)
-    return files
+    return files + kept, sorted(over), "arrow" if on_driver else "spark"
 
 
 def apply_changes(
@@ -274,8 +291,10 @@ def apply_changes(
 ) -> dict[str, Any]:
     """Apply one epoch of change events to the table. Returns the epoch manifest.
 
-    ``cfg.merge_mode`` only decides when the epoch's delta files fold into
-    the base: ``"cow"`` before the commit, ``"mor"`` later (module docstring).
+    ``cfg.merge_mode`` only sets the fold threshold for the touched buckets
+    in this epoch's commit: 1 for ``"cow"``, ``cfg.max_deltas_per_bucket``
+    for ``"mor"`` (module docstring). The manifest's ``compacted_buckets``
+    are the buckets folded and ``fold_path`` the fold that ran.
 
     ``expectations`` are named data-quality predicates over the INPUT events
     (Delta-constraints analog): ``{"ts_set": "ts IS NOT NULL", "known_op":
@@ -284,10 +303,9 @@ def apply_changes(
     the batch — no extra scan, no extra shuffle) and land in the epoch
     manifest under ``expectations``. With ``fail_on_violation`` the epoch
     raises :class:`ExpectationViolation` AFTER the delta files are written but
-    BEFORE any copy-on-write fold and the snapshot commit, so a bad batch
-    leaves no committed state —
-    only orphan files for vacuum. A NULL predicate result counts as a
-    violation (unknown is not acceptable).
+    BEFORE any fold and the snapshot commit, so a bad batch leaves no
+    committed state — only orphan files for vacuum. A NULL predicate result
+    counts as a violation (unknown is not acceptable).
 
     ``extra_manifest`` fields (e.g. a loader's ``source_path``) are merged into
     the epoch manifest BEFORE its first write, so lineage that restart logic
@@ -467,19 +485,15 @@ def _apply_changes_once(
             f"epoch {epoch_id}: data-quality expectations violated {bad} — "
             "snapshot NOT committed (written files are orphans; vacuum reaps)"
         )
-    if cfg.merge_mode == "cow":
-        new_files = _fold_touched(table, snap, evolved, new_mapping, new_files)
-        # the rewritten buckets leave the carried refs by metadata exclusion
-        # — no file descriptor is re-serialized
-        carried_refs = carry_excluding(snap["manifests"], touched)
-    else:
-        # merge-on-read: the parent's manifest refs carry over BY REFERENCE —
-        # commit metadata is O(this epoch's files), flat as the table grows
-        # (manifest-list tier, lake_table.py module docstring)
-        carried_refs = list(snap["manifests"])
+    # merge_mode names the fold threshold; folded buckets' stored refs
+    # leave the commit by metadata exclusion (carry_excluding)
+    new_files, compacted_buckets, fold_path = _fold_touched(
+        table, snap, evolved, new_mapping, new_files,
+        1 if cfg.merge_mode == "cow" else cfg.max_deltas_per_bucket,
+    )
     t_write = time.time() - t_write0
     version = table.commit(
-        carry=carried_refs,
+        carry=carry_excluding(snap["manifests"], compacted_buckets),
         new_files=new_files,
         summary={
             "operation": "merge",
@@ -503,23 +517,6 @@ def _apply_changes_once(
         column_mapping=new_mapping,
     )
 
-    # bounded read amplification under merge-on-read: fold any bucket whose
-    # delta chain exceeded the policy (SURVEY §4 "data layout for reads").
-    # The epoch is already committed at this point, so a compaction conflict
-    # (after its own internal retries) must NOT bubble up as a merge conflict —
-    # the fold is maintenance and safely deferred to the next epoch.
-    compacted_buckets: list[int] = []
-    if cfg.max_deltas_per_bucket > 0:
-        over = [
-            b for b, c in table.delta_counts().items() if c >= cfg.max_deltas_per_bucket
-        ]
-        if over:
-            try:
-                table.compact_buckets(over)
-                compacted_buckets = sorted(over)
-            except CommitConflict:
-                pass  # another writer won; delta chains fold on a later epoch
-
     manifest = {
         "epoch_id": epoch_id,
         "stream_id": stream_id,
@@ -534,6 +531,7 @@ def _apply_changes_once(
         "expectations": exp_counts,
         "merge_mode": cfg.merge_mode,
         "compacted_buckets": compacted_buckets,
+        "fold_path": fold_path,
         "dedup_strategy": cfg.dedup_strategy,
         "apply_path": "arrow" if on_driver else "spark",
         "lineage": _bucket_lineage(new_files),

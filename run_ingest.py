@@ -60,8 +60,10 @@ def main(argv=None):
     )
     p.add_argument(
         "--merge-mode", default="mor", choices=MERGE_MODES,
-        help="mor = O(batch) delta appends + read-time LWW + auto-compaction "
-             "(the ingest default); cow = rewrite touched buckets per epoch",
+        help="names the in-commit fold threshold: mor = O(batch) delta "
+             "appends + read-time LWW, a touched bucket folds once it holds "
+             "16 deltas (the ingest default); cow = every touched bucket "
+             "folds in its epoch's commit",
     )
     p.add_argument(
         "--expect", nargs="*", default=None, metavar="NAME=SQL_PREDICATE",

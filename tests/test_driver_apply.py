@@ -1,17 +1,19 @@
-"""The driver-sized apply, bucket compaction and copy-on-write fold.
+"""The driver-sized apply, bucket compaction and the in-commit fold.
 
 A batch whose Catalyst size estimate is at most
 ``lake_table.DRIVER_FOLD_BYTES`` (``fits_driver``) is brought to the
 driver by one ``toArrow()``, folded with ``lww_winners_arrow`` and written
 with pyarrow; ``compact_buckets`` over buckets whose files fit is folded the
-same way with no Spark job at all, and so is the copy-on-write commit's fold
-of the touched buckets. These tests pin those job counts, and pin that what
-the table records and returns — one key-sorted file per touched bucket, its
-rows and stats, manifests, expectation counts, schema evolution, widening,
-renames, empty batches, a non-UTC session — is what the Spark plans (forced
-with ``forced_spark_plans``) produce for the same input, and that a
-copy-on-write epoch writes what merge-on-read plus a compaction of the
-touched buckets writes.
+same way with no Spark job at all, and so is the fold of touched buckets
+inside an epoch's commit (all of them under copy-on-write, those whose delta
+chain reaches ``max_deltas_per_bucket`` under merge-on-read). These tests
+pin those job counts, and pin that what the table records and returns — one
+key-sorted file per touched bucket, its rows and stats, manifests,
+expectation counts, schema evolution, widening, renames, empty batches, a
+non-UTC session — is what the Spark plans (forced with
+``forced_spark_plans``) produce for the same input, and that an epoch that
+folds writes what merge-on-read plus a compaction of the folded buckets
+writes.
 """
 
 from __future__ import annotations
@@ -198,6 +200,65 @@ def test_cow_apply_equals_mor_then_compact(spark, warehouse, apply_path):
         assert {k: mc[k] for k in fields} == {k: mm[k] for k in fields}
         assert _contents(cow.snapshot()["files"]) == _contents(mor.snapshot()["files"])
     assert cow.schema() == mor.schema()
+
+
+def test_mor_fold_in_commit_equals_twin_compaction(spark, warehouse, apply_path):
+    """Merge-on-read folds a touched bucket inside the epoch's own commit
+    once its delta chain, this epoch's delta included, reaches
+    ``max_deltas_per_bucket``: every epoch adds one snapshot, and its files
+    equal a never-folding twin's after ``compact_buckets`` over the buckets
+    whose chain reached the threshold. After half the buckets are compacted
+    on both tables, an epoch folds only some of its touched buckets; the
+    others keep their deltas, and no data file is left unreferenced."""
+    folding, twin = (
+        LakeTable.create(
+            spark, os.path.join(warehouse, name), STATE_SCHEMA, n_buckets=8
+        )
+        for name in ("folding", "twin")
+    )
+    cfg = EngineConfig(merge_mode="mor", max_deltas_per_bucket=2)
+    ch = generate_changes(
+        spark, 4000, n_conv=80, n_epochs=4, dup_pct=10, evolve_from_epoch=2
+    )
+    partial = False
+    for e, b in epoch_batches(ch, evolve_from_epoch=2):
+        version = folding.current_version()
+        before = {f["path"] for f in folding.snapshot()["files"]}
+        m = apply_changes(folding, b, e, cfg)
+        mt = apply_changes(twin, b, e, MOR)
+        assert folding.current_version() == version + 1
+        assert m["apply_path"] == mt["apply_path"] == apply_path
+        touched = set(mt["touched_buckets"])
+        over = sorted(k for k, n in twin.delta_counts().items() if k in touched and n >= 2)
+        if over:
+            twin.compact_buckets(over)
+        assert m["touched_buckets"] == mt["touched_buckets"]
+        assert m["compacted_buckets"] == over
+        assert m["fold_path"] == (apply_path if over else None)
+        partial |= 0 < len(over) < len(touched)
+        files = folding.snapshot()["files"]
+        added = {(f["bucket"], f["kind"]) for f in files if f["path"] not in before}
+        assert added == {(k, "base" if k in over else "delta") for k in touched}
+        for kind in ("base", "delta"):
+            assert _contents(f for f in files if f["kind"] == kind) == _contents(
+                f for f in twin.snapshot()["files"] if f["kind"] == kind
+            )
+        if e == 0:
+            for table in (folding, twin):
+                table.compact_buckets([0, 1, 2, 3])
+    assert partial
+    referenced = {
+        os.path.realpath(f["path"])
+        for v in range(1, folding.current_version() + 1)
+        for f in folding.snapshot(v)["files"]
+    }
+    on_disk = {
+        os.path.realpath(p)
+        for p in glob.glob(
+            os.path.join(folding.path, "data", "**", "*.parquet"), recursive=True
+        )
+    }
+    assert on_disk and on_disk <= referenced
 
 
 def test_arrow_files_dictionary_encode_repeating_columns_only(spark, warehouse):

@@ -11,10 +11,11 @@ from etl_geo_dem_spark.config import EngineConfig
         {"merge_mode": "MOR"},
         {"dedup_strategy": "bucket_sorted"},
         {"dedup_strategy": "salted_window"},
+        {"max_deltas_per_bucket": -1},
     ],
 )
 def test_unknown_mode_or_strategy_is_a_value_error(kwargs):
-    with pytest.raises(ValueError, match=next(iter(kwargs.values()))):
+    with pytest.raises(ValueError, match=str(next(iter(kwargs.values())))):
         EngineConfig(**kwargs)
 
 

@@ -116,7 +116,7 @@ def test_mor_auto_compaction_bounds_delta_chains_spark_plans(spark, warehouse, s
 
 
 def _check_auto_compaction(spark, warehouse) -> set[str]:
-    """Replay with auto-compaction; returns the apply paths the compactions
+    """Replay with auto-compaction; returns the paths the in-commit folds
     took."""
     cfg = EngineConfig(merge_mode="mor", max_deltas_per_bucket=3)
     ch = generate_changes(spark, 4000, n_conv=40, n_epochs=10, evolve_from_epoch=None)
@@ -134,9 +134,7 @@ def _check_auto_compaction(spark, warehouse) -> set[str]:
         r["text"] if r["text"] is not None else "∅" for r in exp
     ]
     return {
-        h["summary"]["apply_path"]
-        for h in table.history()
-        if h["summary"].get("operation") == "compact_buckets"
+        m["fold_path"] for m in table.read_epoch_manifests() if m["compacted_buckets"]
     }
 
 
