@@ -25,17 +25,19 @@ class EngineConfig:
     as the ``lww_winners_salted_window`` operator.
     """
 
-    # one of operators.lww.STRATEGIES: it picks among the Spark plans only.
-    # A batch that fits the driver (lake_table.fits_driver) is folded with
-    # pyarrow whatever this says. "agg" is planned as ONE exchange by storage
-    # bucket, then an aggregate by (bucket, key) that Spark runs without a
-    # second exchange (plans/merge.py). The trade: no map-side combine before
-    # that shuffle, and skew granularity becomes the storage bucket. For a
-    # batch dominated by one key use "window": a two-exchange plan whose
-    # map-side WindowGroupLimit ships one row per key per map task. Measured
-    # at local[4] on a 4-core host, one MOR epoch of 4.2M events with one key
-    # carrying 80% of them, median of 3 warm runs: "agg" 5.24 s, "window"
-    # 3.12 s. Final state is identical either way (tests/test_round6_fused.py).
+    # one of operators.lww.STRATEGIES: it picks the apply's Spark plan only
+    # (lake_table.bucket_winners). A batch that fits the driver
+    # (lake_table.fits_driver) is folded with pyarrow whatever this says, and
+    # bucket folds (the in-commit fold, compact_buckets) always use "agg".
+    # "agg" is planned as ONE exchange by storage bucket, then an aggregate
+    # by (bucket, key) that Spark runs without a second exchange. The trade:
+    # no map-side combine before that shuffle, and skew granularity becomes
+    # the storage bucket. For a batch dominated by one key use "window": a
+    # two-exchange plan whose map-side WindowGroupLimit ships one row per key
+    # per map task. Measured at local[4] on a 4-core host, one MOR epoch of
+    # 4.2M events with one key carrying 80% of them, median of 3 warm runs:
+    # "agg" 5.24 s, "window" 3.12 s. Final state is identical either way
+    # (tests/test_round6_fused.py).
     dedup_strategy: str = "agg"
     # One fold rule (plans/merge.py): the epoch writes its LWW winners as
     # per-bucket DELTA files, and inside the same commit every touched bucket

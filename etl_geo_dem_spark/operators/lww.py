@@ -37,9 +37,11 @@ inputs too small to be worth a Spark job. It serves the point lookup
 here), the apply (a change batch that fits the driver, such as one
 streaming micro-batch, is folded here by (bucket, key), its output already
 in the bucket writer's order; ``plans/merge.py``) and the bucket folds of
-compaction and of the copy-on-write commit (``LakeTable._fold_files`` folds
-each small bucket's stored files here). The Spark strategies above serve
-every larger input.
+compaction and of the in-commit fold (``LakeTable._fold_files`` folds each
+small bucket's stored files here). Larger inputs fold by (bucket, key) with
+``lake_table.bucket_winners``: the apply with the strategy
+``EngineConfig.dedup_strategy`` names, the bucket folds always with
+``agg``, because a bucket's whole chain already lands in one writer task.
 """
 
 from __future__ import annotations
@@ -81,7 +83,7 @@ def lww_winners_agg(
     with an identical payload (an event re-applied after its column was
     dropped and re-added carries the re-added value), and ``max_by`` keeps
     whichever tied row it meets first. :func:`lww_winners_arrow` keeps the
-    first in input order, and the copy-on-write fold lists the epoch's files
+    first in input order, and the in-commit fold lists the epoch's files
     first (``plans/merge.py:_fold_touched``): there the new delivery wins.
     """
     rest = [c for c in df.columns if c not in key_cols]

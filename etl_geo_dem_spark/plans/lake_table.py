@@ -83,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_geo_dem_spark.operators.lww import lww_winners, lww_winners_agg, lww_winners_arrow
 from etl_geo_dem_spark.plans.commit_backend import CommitBackend, backend_from_env
 from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
 
@@ -208,6 +209,31 @@ def protected_columns(meta: dict[str, Any]) -> set[str]:
 def bucket_expr(key_col: str, n_buckets: int):
     """Deterministic storage bucket of a key (stable across engines/sessions)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def bucket_winners(
+    rows: DataFrame,
+    key_cols: list[str],
+    order_cols: list[str],
+    strategy: str,
+) -> DataFrame:
+    """The Spark fold by (bucket, key): one LWW winner per key of ``rows``
+    (which carry ``_bucket``), clustered by ``_bucket``, for a writer that
+    takes them ``pre_partitioned``. It serves the apply and the bucket folds.
+
+    ``"agg"`` repartitions ONCE by bucket, then aggregates by (bucket, key)
+    with no second exchange: the bucket is a function of the key, so
+    hash(bucket) already co-locates every key. The exchange has no count:
+    ``spark.sql.shuffle.partitions`` sizes it, and each bucket lands in one
+    task, so a commit writes one file per bucket. The trade is no map-side
+    combine before that shuffle. ``"window"`` ranks within (bucket, key),
+    with its ``WindowGroupLimit ... Partial`` below that exchange, then
+    repartitions by bucket: two exchanges, the escape for a batch dominated
+    by one key (``EngineConfig.dedup_strategy``)."""
+    keys = [BUCKET_COL, *key_cols]
+    if strategy == "window":
+        return lww_winners(rows, keys, order_cols, "window").repartition(F.col(BUCKET_COL))
+    return lww_winners(rows.repartition(F.col(BUCKET_COL)), keys, order_cols, strategy)
 
 
 # The largest input, in parquet bytes, that an apply or a bucket fold folds
@@ -960,8 +986,9 @@ class LakeTable:
 
         Merge-on-read resolution: when the snapshot contains DELTA files
         (merge_mode="mor" commits), the current row of a key is the LWW winner
-        over base ∪ deltas — resolved here with the same skew-free reduce the
-        write path uses (:meth:`_resolved`). ``resolve=False`` returns raw
+        over base ∪ deltas — resolved here by :meth:`_resolved`, the
+        skew-free reduce the whole-table rewrites also use, which keeps
+        base-only buckets out of the aggregate. ``resolve=False`` returns raw
         stored rows (inspection internals).
         """
         snap = self.snapshot_meta(version)
@@ -999,8 +1026,6 @@ class LakeTable:
         tombstones included. A base-only bucket is already one row per key,
         so the LWW reduce (the only shuffle) covers delta-bearing buckets
         alone: read cost follows the hot working set, not the table size."""
-        from etl_geo_dem_spark.operators.lww import lww_winners_agg
-
         delta_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
         hot = [f["path"] for f in files if f["bucket"] in delta_buckets]
         cold = [f["path"] for f in files if f["bucket"] not in delta_buckets]
@@ -1043,9 +1068,9 @@ class LakeTable:
         same rows, taken from the footers pyarrow just wrote.
 
         ``pre_partitioned``: caller asserts ``df`` is ALREADY physically
-        clustered by ``_bucket`` (the fused MOR apply in ``plans/merge.py``,
-        whose dedup shuffle is by bucket) — the writer then skips its own
-        repartition, making the whole epoch a single-exchange job. The
+        clustered by ``_bucket`` (the output of :func:`bucket_winners`, the
+        Spark fold of the apply and of the bucket folds) — the writer then
+        skips its own repartition, making the fold a single-exchange job. The
         within-partition sort still runs; file layout and stats are
         byte-identical either way.
 
@@ -1580,10 +1605,11 @@ class LakeTable:
         columns and re-bases physical = logical names; a bucket subset keeps
         the snapshot's mapping and carries the other buckets' refs.
 
-        A bucket subset with no ``row_filter``, ``cluster_by`` or
-        ``n_buckets`` change is folded by :meth:`_fold_files`, with pyarrow
-        and no Spark job when its files fit the driver bound; the summary's
-        ``apply_path`` records which path ran."""
+        The rows come from :meth:`_fold_files`. A bucket subset with no
+        ``row_filter``, ``cluster_by`` or ``n_buckets`` change is a bucket
+        fold: pyarrow and no Spark job when its files fit the driver bound,
+        else the apply's one-exchange plan; the summary's ``apply_path``
+        records which ran."""
 
         def attempt() -> int:
             snap = self.snapshot_meta()
@@ -1591,17 +1617,14 @@ class LakeTable:
             wanted = set(buckets or [])
             stored = [f for f in self._files_of(snap) if full or f["bucket"] in wanted]
             plain = not (full or cluster_by) and row_filter is None and n_buckets is None
-            rows, on_driver = self._fold_files(snap, stored, driver=plain)
+            rows, on_driver = self._fold_files(snap, stored, n_buckets, driver=plain)
             if row_filter is not None:
                 rows = rows.filter(row_filter)
-            if n_buckets is not None:
-                rows = rows.withColumn(
-                    BUCKET_COL, bucket_expr(snap["key_col"], n_buckets)
-                )
             files = self.write_data_files(
                 rows,
                 cluster_by=cluster_by,
                 column_mapping={} if full else None,
+                pre_partitioned=plain,
             )
             return self.commit(
                 carry=[] if full else carry_excluding(snap["manifests"], buckets),
@@ -1624,20 +1647,31 @@ class LakeTable:
         self,
         snap: dict[str, Any],
         files: list[dict[str, Any]],
+        n_buckets: int | None,
         driver: bool = True,
     ) -> tuple[pa.Table | DataFrame, bool]:
-        """``files`` of ``snap`` (whole buckets) folded to one LWW winner per
-        key plus ``_bucket``, ready to rewrite as base files: the fold of
-        :meth:`_rewrite` and of the copy-on-write apply. Pyarrow
-        (:meth:`_fold_buckets_arrow`) when ``driver`` and :func:`fits_driver`
-        hold, else :meth:`_resolved`. Returns (rows, driver folded)."""
+        """``files`` of ``snap`` folded to one LWW winner per key plus
+        ``_bucket`` under ``n_buckets`` (None = the snapshot's count), ready
+        to rewrite as base files. Returns (rows, driver folded).
+
+        ``driver``: the files are whole buckets folded in place (the
+        in-commit fold of the apply, :meth:`compact_buckets`). They fold
+        with pyarrow (:meth:`_fold_buckets_arrow`) when :func:`fits_driver`
+        holds, else with the apply's Spark plan, :func:`bucket_winners`
+        ("agg"), whose output the writer takes ``pre_partitioned``.
+        Otherwise (the whole-table rewrites) :meth:`_resolved` folds them,
+        keeping base-only buckets out of the aggregate, and the writer
+        repartitions by bucket."""
         if driver and fits_driver(sum(f["bytes"] for f in files)):
             return self._fold_buckets_arrow(snap, files), True
         schema = T.StructType.fromJson(snap["schema"])
-        rows = self._resolved(snap, schema, files).withColumn(
-            BUCKET_COL, bucket_expr(snap["key_col"], int(snap["n_buckets"]))
-        )
-        return rows, False
+        bucket = bucket_expr(snap["key_col"], n_buckets or int(snap["n_buckets"]))
+        if not driver:
+            return self._resolved(snap, schema, files).withColumn(BUCKET_COL, bucket), False
+        rows = self._read_parquet(snap, schema, [f["path"] for f in files])
+        return bucket_winners(
+            rows.withColumn(BUCKET_COL, bucket), snap["key_cols"], snap["order_cols"], "agg"
+        ), False
 
     def _fold_buckets_arrow(
         self, snap: dict[str, Any], files: list[dict[str, Any]]
@@ -1651,8 +1685,6 @@ class LakeTable:
         the first-listed of rows tied on the whole order key."""
         import numpy as np
         import pyarrow as pa
-
-        from etl_geo_dem_spark.operators.lww import lww_winners_arrow
 
         schema = T.StructType.fromJson(snap["schema"])
         paths: dict[int, list[str]] = {}
@@ -2355,8 +2387,6 @@ class LakeTable:
         result is a local relation in the logical schema: collecting it
         runs no Spark job."""
         import pyarrow.compute as pc
-
-        from etl_geo_dem_spark.operators.lww import lww_winners_arrow
 
         snap = self.snapshot_meta(version)
         schema = T.StructType.fromJson(snap["schema"])

@@ -12,14 +12,16 @@ Semantics (SURVEY.md §2.3 J5 — the reference's join-update
     (deletes on absent keys still write a tombstone, so a later out-of-order
      event older than the delete cannot resurrect the row)
 
-Physically, both merge modes run one apply: a per-key LWW reduce of the
-batch written as one DELTA file per touched bucket, ONE Spark job per epoch
-(the touched-bucket set falls out of the written files' metadata). A batch
-that fits the driver (``fits_driver``: Catalyst's size estimate at most
-``lake_table.DRIVER_FOLD_BYTES``, e.g. one streaming trigger) keeps that one
-job but not its shuffle: the job is a ``toArrow()`` of the projected,
-bucketed batch, and the fold and the per-bucket writes run with pyarrow on
-the driver (``_fold_on_driver``; docs/PLANS.md).
+Physically, both merge modes run one apply: the batch in state shape with
+its storage bucket, folded to one LWW winner per (bucket, key) and written
+as one DELTA file per touched bucket, ONE Spark job per epoch (the
+touched-bucket set falls out of the written files' metadata). Two engines
+run the fold on that one input. A batch that fits the driver
+(``fits_driver``: Catalyst's size estimate at most
+``lake_table.DRIVER_FOLD_BYTES``, e.g. one streaming trigger) is brought
+there by a ``toArrow()``, and the fold and the per-bucket writes run with
+pyarrow; a larger one runs ``lake_table.bucket_winners``, the Spark plan
+the bucket folds share (docs/PLANS.md).
 
 When the deltas fold into the base (stream–table duality) is one rule,
 ``_fold_touched``: inside the epoch's own commit, every touched bucket whose
@@ -48,28 +50,26 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from typing import TYPE_CHECKING, Any
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_geo_dem_spark.config import EngineConfig
-from etl_geo_dem_spark.operators.lww import lww_winners, lww_winners_arrow
+from etl_geo_dem_spark.operators.lww import lww_winners_arrow
 from etl_geo_dem_spark.plans.lake_table import (
     BUCKET_COL,
     CommitConflict,
     LakeTable,
     bucket_expr,
+    bucket_winners,
     carry_excluding,
     delta_counts_of,
     fits_driver,
     protected_columns,
     retrying_commit,
 )
-
-if TYPE_CHECKING:
-    import pyarrow as pa
 
 ENVELOPE_COLS = {"op", "epoch"}
 
@@ -179,10 +179,10 @@ def evolve_schema(
 
 
 def _to_state_shape(
-    winners: DataFrame, evolved: T.StructType, *extra: Column
+    batch: DataFrame, evolved: T.StructType, *extra: Column
 ) -> DataFrame:
-    """Project batch LWW winners into internal state shape (tombstone flag set),
-    followed by the ``extra`` columns, which are evaluated on ``winners``.
+    """Project change events into internal state shape (tombstone flag set),
+    followed by the ``extra`` columns, which are evaluated on ``batch``.
 
     Columns cast to the EVOLVED type: after a widening evolution the batch may
     be the narrow side (old producer still emitting int32 into a widened-long
@@ -191,11 +191,11 @@ def _to_state_shape(
     for f in evolved.fields:
         if f.name == "_deleted":
             cols.append((F.col("op") == "D").alias("_deleted"))
-        elif f.name in winners.columns:
+        elif f.name in batch.columns:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return winners.select(*cols, *extra)
+    return batch.select(*cols, *extra)
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -203,44 +203,6 @@ def _estimated_bytes(df: DataFrame) -> int:
     scan (a streaming micro-batch included) it is the input files' bytes; an
     unknown size reads as ``Long.MaxValue``."""
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-
-
-def _fold_on_driver(
-    batch: DataFrame,
-    evolved: T.StructType,
-    bucket_key: str,
-    n_buckets: int,
-    key_cols: list[str],
-    order_cols: list[str],
-    expectations: dict[str, Any] | None,
-) -> tuple[int, dict[str, int], pa.Table]:
-    """The driver-sized apply's one Spark job: the batch in state shape,
-    with its storage bucket and one violation flag per expectation, brought
-    to the driver by a single ``toArrow()``. There the expectation counts are
-    summed and :func:`lww_winners_arrow` folds the rows by (bucket, key),
-    which is the order the bucket writer wants.
-
-    Returns (input events, violation counts by name, winners as a
-    bucket-sorted Arrow table in logical names plus ``_bucket``)."""
-    import pyarrow.compute as pc
-
-    flags = {
-        f"_viol_{i}": ~F.coalesce(F.expr(c) if isinstance(c, str) else c, F.lit(False))
-        for i, c in enumerate((expectations or {}).values())
-    }
-    events = (
-        _to_state_shape(batch, evolved, *[c.alias(n) for n, c in flags.items()])
-        .withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-        .toArrow()
-    )
-    counts = {
-        name: int(pc.sum(events[flag]).as_py() or 0)
-        for name, flag in zip(expectations or {}, flags)
-    }
-    winners = lww_winners_arrow(
-        events.drop_columns(list(flags)), [BUCKET_COL, *key_cols], order_cols
-    )
-    return events.num_rows, counts, winners
 
 
 def _fold_touched(
@@ -268,8 +230,10 @@ def _fold_touched(
     kept = [f for f in deltas if f["bucket"] not in over]
     pending = {**snap, "schema": evolved.jsonValue(), "column_mapping": mapping}
     stored = [f for f in table._files_of(snap) if f["bucket"] in over]
-    rows, on_driver = table._fold_files(pending, folding + stored)
-    files = table.write_data_files(rows, kind="base", column_mapping=mapping)
+    rows, on_driver = table._fold_files(pending, folding + stored, None)
+    files = table.write_data_files(
+        rows, kind="base", column_mapping=mapping, pre_partitioned=True
+    )
     # the folded deltas were never committed: drop their bucket dirs, or the
     # whole commit dir when none of its files is kept
     commit_dir = os.path.dirname(os.path.dirname(deltas[0]["path"]))
@@ -296,16 +260,22 @@ def apply_changes(
     for ``"mor"`` (module docstring). The manifest's ``compacted_buckets``
     are the buckets folded and ``fold_path`` the fold that ran.
 
+    ``cfg.dedup_strategy`` picks the Spark fold of a batch above the driver
+    bound (:func:`~etl_geo_dem_spark.plans.lake_table.bucket_winners`); a
+    batch that fits the driver folds with pyarrow whatever it says.
+
     ``expectations`` are named data-quality predicates over the INPUT events
     (Delta-constraints analog): ``{"ts_set": "ts IS NOT NULL", "known_op":
     F.col("op").isin("I","U","D")}`` — string entries go through ``F.expr``.
-    Violation counts ride the SAME pass as the merge (Observation metrics on
-    the batch — no extra scan, no extra shuffle) and land in the epoch
-    manifest under ``expectations``. With ``fail_on_violation`` the epoch
-    raises :class:`ExpectationViolation` AFTER the delta files are written but
-    BEFORE any fold and the snapshot commit, so a bad batch leaves no
-    committed state — only orphan files for vacuum. A NULL predicate result
-    counts as a violation (unknown is not acceptable).
+    Each becomes a violation flag column of the fold's input, summed in the
+    SAME pass as the merge (on the driver's Arrow rows, or as Observation
+    metrics of the Spark plan — no extra scan, no extra shuffle); the counts
+    land in the epoch manifest under ``expectations``. With
+    ``fail_on_violation`` the epoch raises :class:`ExpectationViolation`
+    AFTER the delta files are written but BEFORE any fold and the snapshot
+    commit, so a bad batch leaves no committed state — only orphan files for
+    vacuum. A NULL predicate result counts as a violation (unknown is not
+    acceptable).
 
     ``extra_manifest`` fields (e.g. a loader's ``source_path``) are merged into
     the epoch manifest BEFORE its first write, so lineage that restart logic
@@ -407,76 +377,54 @@ def _apply_changes_once(
     key_cols = snap["key_cols"]
     order_cols = snap["order_cols"]
 
-    # A batch that fits the driver (fits_driver, on Catalyst's size
-    # estimate: planned, not run) is folded and written with pyarrow in ONE
-    # Spark job, the toArrow. Larger batches take the Spark plan below. Either
+    # ONE input for both engines: the batch in state shape with its storage
+    # bucket and a violation flag per expectation (NULL counts as a
+    # violation: unknown is not acceptable). A batch that fits the driver
+    # (fits_driver, on Catalyst's size estimate: planned, not run) is brought
+    # there by ONE Spark job, the toArrow, and folded by (bucket, key) with
+    # pyarrow, which is the bucket writer's order. Larger batches fold with
+    # bucket_winners, one Spark job too: no read of current state, and the
+    # touched-bucket set falls out of the written files' metadata. Either
     # way the epoch's LWW winners land as one delta file per touched bucket.
+    flags = {
+        f"_viol_{i}": ~F.coalesce(F.expr(c) if isinstance(c, str) else c, F.lit(False))
+        for i, c in enumerate((expectations or {}).values())
+    }
+    events = _to_state_shape(
+        batch, evolved, *[c.alias(n) for n, c in flags.items()]
+    ).withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
     on_driver = fits_driver(_estimated_bytes(batch))
+    t_write0 = time.time()
     if on_driver:
-        t_write0 = time.time()
-        input_events, exp_counts, winners = _fold_on_driver(
-            batch, evolved, bucket_key, n_buckets, key_cols, order_cols,
-            expectations,
-        )
-        new_files = table.write_data_files(
-            winners, kind="delta", column_mapping=new_mapping
+        import pyarrow.compute as pc
+
+        rows = events.toArrow()
+        input_events = rows.num_rows
+        sums = {f: pc.sum(rows[f]).as_py() for f in flags}
+        winners = lww_winners_arrow(
+            rows.drop_columns(list(flags)), [BUCKET_COL, *key_cols], order_cols
         )
     else:
-        obs_in = Observation(f"epoch_{epoch_id}_in")
-        exp_metrics = []
-        for name, cond in (expectations or {}).items():
-            c = F.expr(cond) if isinstance(cond, str) else cond
-            # NULL predicate result counts as a violation (unknown != acceptable)
-            exp_metrics.append(
-                F.sum(F.when(F.coalesce(c, F.lit(False)), 0).otherwise(1)).alias(
-                    f"viol_{name}"
-                )
-            )
-        batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events"), *exp_metrics)
-
-        fused = cfg.dedup_strategy == "agg"
-        if fused:
-            # fused-exchange apply (round 6, guide §2.4 "two operations keyed
-            # the same way can share one exchange"): repartition ONCE by the
-            # storage bucket, then aggregate by (bucket, key). The exchange has no
-            # explicit count: spark.sql.shuffle.partitions sizes it, and each
-            # bucket still lands in exactly one task, so a commit writes at most
-            # one file per bucket; raise that setting for more write parallelism.
-            # Bucket is a pure function of the key, so bucket-partitioning
-            # already co-locates every key and Spark plans the aggregate WITHOUT
-            # its own exchange; the writer then takes the output
-            # pre_partitioned. One shuffle + one stage barrier per
-            # epoch instead of two of each (measured 3.6 s → 2.3 s per bench
-            # epoch warm). The skew trade, and the "window" escape for a batch
-            # dominated by one key, are documented on EngineConfig.dedup_strategy.
-            bucketed = batch.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-            winners = lww_winners(
-                bucketed.repartition(F.col(BUCKET_COL)),
-                [BUCKET_COL, *key_cols], order_cols, strategy="agg",
-            )
-        else:
-            winners = lww_winners(batch, key_cols, order_cols, strategy=cfg.dedup_strategy)
-        batch_state = _to_state_shape(winners, evolved).withColumn(
-            BUCKET_COL, bucket_expr(bucket_key, n_buckets)
+        obs = Observation(f"epoch_{epoch_id}_in")
+        observed = events.observe(
+            obs,
+            F.count(F.lit(1)).alias("events"),
+            *[F.sum(F.col(f).cast("long")).alias(f) for f in flags],
         )
-        t_write0 = time.time()  # the plan is built; the first Spark job follows
-        # ONE Spark job: no read of current state, and the touched-bucket set
-        # falls out of the written files' metadata, so no pre-write
-        # distinct+collect — that extra job was a per-epoch driver-side
-        # constant that Amdahl-capped multi-executor scaling (measured in
-        # BENCH/BASELINE.md §4: the 4-JVM level pays it at ~4× the relative
-        # cost of the 1-JVM level).
-        new_files = table.write_data_files(
-            batch_state, kind="delta", column_mapping=new_mapping,
-            pre_partitioned=fused,
+        winners = bucket_winners(
+            observed.drop(*flags), key_cols, order_cols, cfg.dedup_strategy
         )
-        # F.sum over an EMPTY batch is NULL (and an optimized-away plan has no
-        # metrics at all) — both mean zero violations, not a crash in the gate.
-        exp_counts = {
-            name: int(_obs_value(obs_in, f"viol_{name}") or 0)
-            for name in (expectations or {})
-        }
-        input_events = _obs_value(obs_in, "events")
+    new_files = table.write_data_files(
+        winners, kind="delta", column_mapping=new_mapping, pre_partitioned=True
+    )
+    if not on_driver:
+        input_events = _obs_value(obs, "events")
+        sums = {f: _obs_value(obs, f) for f in flags}
+    # a sum over an EMPTY batch is NULL (and an optimized-away plan has no
+    # metrics at all): both mean zero violations, not a crash in the gate
+    exp_counts = {
+        name: int(sums[f] or 0) for name, f in zip(expectations or {}, flags)
+    }
     t_plan = t_write0 - t0
     touched = sorted({f["bucket"] for f in new_files})
     if fail_on_violation and any(v > 0 for v in exp_counts.values()):

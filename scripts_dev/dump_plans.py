@@ -1,8 +1,13 @@
 """Dump annotated physical plans of the engine's hot paths → docs/PLANS.md.
 
-The judge-facing evidence for "explain and iterate until it's the plan you'd
-want": filter pushdown at the scan, broadcast dim joins, map-side partial
-aggregation in the LWW reduce, bucket-pruned lake reads, Arrow-only Python.
+The evidence for "explain and iterate until it's the plan you'd want":
+filter pushdown at the scan, broadcast dim joins, map-side partial
+aggregation in the LWW reduce, the one-exchange Spark bucket fold,
+bucket-pruned lake reads, Arrow-only Python.
+
+Run from the repository root: ``python scripts_dev/dump_plans.py``. Only the
+part of docs/PLANS.md after the ``MARKER`` line is rewritten; the
+hand-written sections above it are kept.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_geo_dem_spark.config import EngineConfig  # noqa: E402
+from etl_geo_dem_spark.plans import lake_table  # noqa: E402
 from etl_geo_dem_spark.plans.lake_table import LakeTable  # noqa: E402
 from etl_geo_dem_spark.plans.merge import apply_changes  # noqa: E402
 from etl_geo_dem_spark.queries import REGISTRY  # noqa: E402
@@ -24,6 +30,11 @@ from etl_geo_dem_spark.session import get_spark  # noqa: E402
 from etl_geo_dem_spark.sources.changes import generate_changes  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+PLANS = "docs/PLANS.md"
+MARKER = (
+    "<!-- Generated by scripts_dev/dump_plans.py (sf0.001, local[4]): "
+    "everything below this line is rewritten. -->"
+)
 
 
 def plan_of(df) -> str:
@@ -32,14 +43,13 @@ def plan_of(df) -> str:
     )
 
 
-def main():
-    spark = get_spark(master="local[4]", shuffle_partitions=8)
+def generated_sections(spark, wh: str) -> list[str]:
+    """The generated sections of docs/PLANS.md, from a table built under ``wh``."""
     sections = []
 
     def add(title, note, df):
         sections.append(f"## {title}\n\n{note}\n\n```\n{plan_of(df)}\n```\n")
 
-    wh = tempfile.mkdtemp(prefix="plans_")
     table = LakeTable.create(spark, wh + "/t", STATE_SCHEMA, n_buckets=8)
     ch = generate_changes(spark, 20_000, n_conv=200, n_epochs=2)
     apply_changes(table, ch.filter(F.col("epoch") == 0), 0, EngineConfig(merge_mode="mor"))
@@ -61,6 +71,28 @@ def main():
         "shuffle covers only delta-bearing buckets — "
         "test_mor_read_resolves_only_delta_buckets.)",
         table.read_public(),
+    )
+    snap = table.snapshot_meta()
+    subset = [f for f in table._files_of(snap) if f["bucket"] in (1, 2, 5)]
+    bound = lake_table.DRIVER_FOLD_BYTES
+    lake_table.DRIVER_FOLD_BYTES = -1  # the Spark plan, whatever the size
+    try:
+        rows, _ = table._fold_files(snap, subset, None)
+    finally:
+        lake_table.DRIVER_FOLD_BYTES = bound
+    add(
+        "Spark bucket fold",
+        "LakeTable._fold_files over three delta-bearing buckets above the "
+        "driver bound (the in-commit fold of an epoch, compact_buckets): "
+        "lake_table.bucket_winners, the plan the apply runs above the bound "
+        "with dedup_strategy=\"agg\". ONE Exchange, hashpartitioning(_bucket), "
+        "then the SortAggregate pair by (_bucket, conv_id, turn_idx) with no "
+        "exchange of its own: the bucket is a function of the key, so each "
+        "key already sits in one task. The writer takes the output "
+        "pre_partitioned and adds no repartition. (The whole-table rewrites "
+        "keep LakeTable._resolved and the writer's repartition by bucket: an "
+        "exchange by key for the delta-bearing buckets, then one by bucket.)",
+        rows,
     )
     add(
         "Key-filtered read_public() scan of the transcript table",
@@ -95,14 +127,20 @@ def main():
         REGISTRY["zz_multimodal_decode_metadata"].fn(spark, SF),
     )
 
-    os.makedirs("docs", exist_ok=True)
-    with open("docs/PLANS.md", "w") as f:
-        f.write(
-            "# PLANS — annotated physical plans of the hot paths\n\n"
-            "Generated by `scripts_dev/dump_plans.py` (sf0.001, local[4]).\n\n"
-            + "\n".join(sections)
-        )
-    print("wrote docs/PLANS.md")
+    return sections
+
+
+def main():
+    spark = get_spark(master="local[4]", shuffle_partitions=8)
+    with tempfile.TemporaryDirectory(prefix="plans_") as wh:
+        sections = generated_sections(spark, wh)
+    with open(PLANS) as f:
+        kept, found, _ = f.read().partition(MARKER + "\n")
+    if not found:
+        raise SystemExit(f"{PLANS} has no marker line {MARKER!r}: not rewriting it")
+    with open(PLANS, "w") as f:
+        f.write(kept + MARKER + "\n\n" + "\n".join(sections))
+    print(f"rewrote the generated sections of {PLANS}")
 
 
 if __name__ == "__main__":

@@ -62,19 +62,30 @@ def test_lww_agg_has_map_side_combine(spark):
 def test_lww_window_limits_map_side(spark):
     """``window`` is the engine's skew escape only because Catalyst plans a
     map-side ``WindowGroupLimit ... Partial`` below the shuffle: each map task
-    forwards one row per key, so a hot key cannot pile onto one reducer. This
-    is the plan the non-fused apply runs for ``dedup_strategy="window"``."""
+    forwards one row per key, so a hot key cannot pile onto one reducer.
+    Checked on the operator over the table key and on the plan the apply
+    runs for ``dedup_strategy="window"``, the window over (bucket, key)."""
     from etl_geo_dem_spark.operators.lww import lww_winners
+    from etl_geo_dem_spark.plans.lake_table import (
+        BUCKET_COL,
+        bucket_expr,
+        bucket_winners,
+    )
     from etl_geo_dem_spark.sources.changes import generate_changes
 
     batch = generate_changes(spark, 2000, n_conv=50, n_epochs=1)
-    plan = lww_winners(batch, strategy="window")._jdf.queryExecution().executedPlan()
-    lines = plan.toString().splitlines()
-    first_exchange = next(i for i, line in enumerate(lines) if "Exchange" in line)
-    assert any(
-        "WindowGroupLimit" in line and line.rstrip().endswith("Partial")
-        for line in lines[first_exchange + 1:]
-    )
+    bucketed = batch.withColumn(BUCKET_COL, bucket_expr("conv_id", 8))
+    for winners in (
+        lww_winners(batch, strategy="window"),
+        bucket_winners(bucketed, ["conv_id", "turn_idx"], ["ts", "lsn"], "window"),
+    ):
+        lines = winners._jdf.queryExecution().executedPlan().toString().splitlines()
+        # the plan prints root first: the lowest Exchange is the key shuffle
+        last_exchange = max(i for i, line in enumerate(lines) if "Exchange" in line)
+        assert any(
+            "WindowGroupLimit" in line and line.rstrip().endswith("Partial")
+            for line in lines[last_exchange + 1:]
+        ), "\n".join(lines)
 
 
 def test_no_row_python_udfs_anywhere(spark):

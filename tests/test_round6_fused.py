@@ -10,11 +10,16 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import forced_spark_plans
 from pyspark.sql import functions as F
 
 from etl_geo_dem_spark.config import EngineConfig
-from etl_geo_dem_spark.operators.lww import lww_winners
-from etl_geo_dem_spark.plans.lake_table import BUCKET_COL, LakeTable, bucket_expr
+from etl_geo_dem_spark.plans.lake_table import (
+    BUCKET_COL,
+    LakeTable,
+    bucket_expr,
+    bucket_winners,
+)
 from etl_geo_dem_spark.plans.merge import apply_changes
 from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import epoch_batches, generate_changes
@@ -50,22 +55,40 @@ def test_fused_final_state_equals_split(spark, warehouse, spark_plans):
     assert a.equals(b)
 
 
-def test_fused_agg_is_single_exchange(spark):
+def _assert_one_bucket_exchange(df) -> None:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n_exchanges = plan.count("Exchange")
+    assert n_exchanges == 1, f"expected 1 Exchange, got {n_exchanges}:\n{plan}"
+    assert BUCKET_COL in plan.split("Exchange", 1)[1].split("\n", 1)[0], plan
+
+
+def test_fused_agg_is_single_exchange(spark, warehouse):
     """The fused plan's whole point: repartition by storage bucket, then
     aggregate by (bucket, key) WITHOUT a second exchange — Spark must accept
     hash(bucket) partitioning as satisfying the (bucket, key) clustering.
-    Plans the same count-free exchange as ``plans/merge.py``."""
+    Pinned for the plan the apply runs (``bucket_winners``) and for the
+    Spark fold of a delta-bearing bucket subset (the in-commit fold and
+    ``compact_buckets``), which runs the same plan."""
     ch = generate_changes(spark, 5_000, n_conv=100, turns_per_conv=10,
-                          n_epochs=1, n_partitions=4)
+                          n_epochs=2, n_partitions=4)
     bucketed = ch.withColumn(BUCKET_COL, bucket_expr("conv_id", 8))
-    winners = lww_winners(
-        bucketed.repartition(F.col(BUCKET_COL)),
-        [BUCKET_COL, "conv_id", "turn_idx"], ["ts", "lsn"], strategy="agg",
+    _assert_one_bucket_exchange(
+        bucket_winners(bucketed, ["conv_id", "turn_idx"], ["ts", "lsn"], "agg")
     )
-    plan = winners._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges == 1, f"expected 1 Exchange, got {n_exchanges}:\n{plan}"
-    assert BUCKET_COL in plan.split("Exchange", 1)[1].split("\n", 1)[0]
+
+    table = LakeTable.create(
+        spark, os.path.join(warehouse, "fold"), STATE_SCHEMA, n_buckets=8
+    )
+    never = EngineConfig(merge_mode="mor", max_deltas_per_bucket=0)
+    for e in (0, 1):
+        apply_changes(table, ch.filter(F.col("epoch") == e), e, never)
+    snap = table.snapshot_meta()
+    subset = [f for f in table._files_of(snap) if f["bucket"] in (1, 2, 5)]
+    assert any(f["kind"] == "delta" for f in subset)
+    with forced_spark_plans():
+        rows, on_driver = table._fold_files(snap, subset, None)
+    assert not on_driver
+    _assert_one_bucket_exchange(rows)
 
 
 @pytest.mark.parametrize("fused", [True, False])
